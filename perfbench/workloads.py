@@ -49,9 +49,12 @@ LOOP_QUERIES = frozenset({"graph_pagerank_trade"})
 # Pass times keep falling for several passes as the JVM compiles the driver's
 # hot paths; the first pass is ~3x a warm one.
 SUITE_WARMUP_PASSES = 2
-# Each query's median over at least this many timed passes, so one slow
-# query in one pass does not move the result.
-SUITE_MIN_PASSES = 4
+# work_s takes each query's median over the first SUITE_PASSES timed passes,
+# so one slow query in one pass does not move it, and every run counts the
+# same passes of the warm-up curve: when the count followed the clock, a run
+# on a slow host counted only its first (slower) four passes and a fast one
+# five, which widened the spread between runs.
+SUITE_PASSES = 5
 
 
 @contextmanager
@@ -124,14 +127,15 @@ def suite(ctx) -> float:
     passes = {False: [], True: []}
     t_end = ctx.start_timing() + ctx.seconds
     i = 0
-    while time.perf_counter() < t_end or len(passes[ctx.trace]) < SUITE_MIN_PASSES:
+    while time.perf_counter() < t_end or len(passes[ctx.trace]) < SUITE_PASSES:
         ctx.tracer.enabled = ctx.traced(i)
         passes[ctx.tracer.enabled].append(_suite_pass(ctx, specs, expected, data_dir))
         i += 1
     ctx.tracer.enabled = False
     untraced = [p["total"] for p in passes[False]]
-    work_s = _per_query_median_sum(passes[False])
-    ctx.detail.update({"work_s": work_s, "passes": len(untraced), "queries": list(SUITE), "samples_s": untraced})
+    work_s = _per_query_median_sum(passes[False][:SUITE_PASSES])
+    ctx.detail.update({"work_s": work_s, "passes": len(untraced), "counted_passes": SUITE_PASSES,
+                       "queries": list(SUITE), "samples_s": untraced})
 
     traced = passes[True]
     if traced:
@@ -139,7 +143,8 @@ def suite(ctx) -> float:
         ctx.layers["operators.build_s.loops"] = common.median(p["build_loops"] for p in traced)
         ctx.layers["catalyst.plan_s"] = common.median(p["plan"] for p in traced)
         ctx.layers["exec.s"] = common.median(p["exec"] for p in traced)
-        ctx.layers["trace.overhead_pct"] = 100.0 * (_per_query_median_sum(traced) - work_s) / work_s
+        overhead = _per_query_median_sum(traced[:SUITE_PASSES]) - work_s
+        ctx.layers["trace.overhead_pct"] = 100.0 * overhead / work_s
         ctx.detail["traced_passes"] = len(traced)
     return work_s
 
@@ -151,6 +156,10 @@ def suite(ctx) -> float:
 PAYLOADS_PER_CYCLE = len(datagen.SERVICES)  # one per service
 RECORDS_PER_PAYLOAD = 6000
 INGEST_WARMUP_CYCLES = 2
+# work_s is the median of the first INGEST_CYCLES timed cycles, for the same
+# reason as SUITE_PASSES: read-back cost grows with the files written, so
+# every run counts the same cycles.
+INGEST_CYCLES = 7
 _LOG_EPOCH_NS = 1_767_225_600 * 10**9  # 2026-01-01T00:00:00Z
 
 
@@ -236,9 +245,11 @@ def ingest(ctx) -> float:
         t_end = ctx.start_timing() + ctx.seconds
         logs0 = feed.total
         i = 0
-        while time.perf_counter() < t_end:
+        ran = {False: 0, True: 0}  # cycles run, also those that failed
+        while time.perf_counter() < t_end or ran[ctx.trace] < INGEST_CYCLES:
             tr.enabled = ctx.traced(i)
             c = cycle()
+            ran[tr.enabled] += 1
             if c is not None:
                 cycles[tr.enabled].append(c)
             i += 1
@@ -259,11 +270,13 @@ def ingest(ctx) -> float:
         receiver.stop()
 
     untraced = cycles[False]
-    work_s = common.median(c["cycle"] for c in untraced)
-    fresh_ms = [1000 * c["fresh"] for c in untraced]
+    counted = untraced[:INGEST_CYCLES]
+    work_s = common.median(c["cycle"] for c in counted)
+    fresh_ms = [1000 * c["fresh"] for c in counted]
     ctx.detail.update({
         "work_s": work_s,
         "cycles": len(untraced),
+        "counted_cycles": len(counted),
         "samples_s": [c["cycle"] for c in untraced],
         "logs_per_cycle": PAYLOADS_PER_CYCLE * RECORDS_PER_PAYLOAD,
         "logs_per_s": logs_timed / elapsed,
@@ -280,7 +293,8 @@ def ingest(ctx) -> float:
         ctx.layers["ingest.files_per_batch"] = common.median(c["files"] for c in traced)
         ctx.layers["registry.sync_ms"] = 1000 * common.median(c["sync"] for c in traced)
         ctx.layers["registry.read_s"] = common.median(c["read"] for c in traced)
-        ctx.layers["trace.overhead_pct"] = 100.0 * (common.median(c["cycle"] for c in traced) - work_s) / work_s
+        overhead = common.median(c["cycle"] for c in traced[:INGEST_CYCLES]) - work_s
+        ctx.layers["trace.overhead_pct"] = 100.0 * overhead / work_s
         ctx.detail["traced_cycles"] = len(traced)
     ctx.layers["ingest.bytes_per_log"] = warehouse_bytes / feed.total
     ctx.layers["registry.files"] = len(files)
@@ -296,7 +310,13 @@ SERVING_HOURS = 4
 SERVING_PAYLOAD_RECORDS = 2500
 WINDOW_MINUTES = 15
 ROLLUP_DIMS = ("service_name", "severity_text")
-RATE_PER_S = 0.5  # dashboard refreshes per second, and ad-hoc queries per second
+# Dashboard refreshes per second, and ad-hoc queries per second. A refresh
+# takes ~0.9 s on 4 cores (~1.2 s when the host is slow), a query ~0.2 s.
+RATE_PER_S = 0.5
+# Each query is due this share of a period after a refresh: after the
+# slowest refresh ends and before the next one starts, so the two streams
+# do not contend and a slow host does not make the query slower twice.
+QUERY_OFFSET = 0.65
 SERVING_WARMUP_ROUNDS = 6
 HEALTH_PROBES = 30
 
@@ -420,7 +440,8 @@ def serving(ctx) -> float:
     lock = threading.Lock()
 
     def request(kind: str, k: int) -> bool:
-        """Send one request and check its answer."""
+        """Send one request and check its answer; ``k`` counts the requests
+        of its stream, so the ad-hoc queries take each shape in turn."""
         if kind == "query":
             sql = sqls[k % len(sqls)]
             status, body = client.call("POST", "/query", {"sql": sql})
@@ -453,27 +474,34 @@ def serving(ctx) -> float:
             records[kind].append((k, rec))
 
     try:
+        def warm_queries(k: int) -> None:
+            for j in range(len(sqls)):
+                send("query", k * len(sqls) + j, time.perf_counter())
+
         with ThreadPoolExecutor(max_workers=len(kinds)) as pool:
-            # warm every route: rounds of all three requests, closed loop
+            # warm every route: rounds of both panels and every query shape,
+            # closed loop
             w0 = time.perf_counter()
             for k in range(SERVING_WARMUP_ROUNDS):
                 now = time.perf_counter()
-                for f in [pool.submit(send, kind, k, now) for kind in kinds]:
+                warm = [pool.submit(send, kind, k, now) for kind in ("q5", "q6")]
+                for f in [*warm, pool.submit(warm_queries, k)]:
                     f.result()
             for v in records.values():
                 v.clear()
             ctx.detail["warmup_s"] = time.perf_counter() - w0
             # Open loop: a dashboard refresh (both panels, concurrently) every
-            # 1/RATE_PER_S seconds and an ad-hoc query half a period after
-            # each. The schedule never waits for answers; each request is
-            # timed from its due time.
+            # 1/RATE_PER_S seconds and an ad-hoc query QUERY_OFFSET of a
+            # period after each. The schedule never waits for answers; each
+            # request is timed from its due time.
             t0 = ctx.start_timing()
+            dues = common.schedule(t0, RATE_PER_S, ctx.seconds)
             events = sorted(
-                [(due, ("q5", "q6")) for due in common.schedule(t0, RATE_PER_S, ctx.seconds)]
-                + [(due + 0.5 / RATE_PER_S, ("query",)) for due in common.schedule(t0, RATE_PER_S, ctx.seconds)]
+                [(due, k, ("q5", "q6")) for k, due in enumerate(dues)]
+                + [(due + QUERY_OFFSET / RATE_PER_S, k, ("query",)) for k, due in enumerate(dues)]
             )
             futures = []
-            for k, (due, due_kinds) in enumerate(events):
+            for due, k, due_kinds in events:
                 delay = due - time.perf_counter()
                 if delay > 0:
                     time.sleep(delay)
@@ -499,9 +527,13 @@ def serving(ctx) -> float:
             refresh[k] = max(refresh.get(k, 0.0), r.latency)
     dash_ms = [1000 * refresh[k] for k in sorted(refresh)]
     query_ms = lat_ms("query")
-    # like a suite pass, the sum of each kind's own median: never a
-    # percentile across different requests
-    work_s = (common.median(dash_ms) + common.median(query_ms)) / 1000.0
+    # Never a percentile across different requests: the query figure is the
+    # mean over shapes of each shape's own median, and work_s adds the
+    # median refresh to it.
+    shapes = [[1000 * r.latency for k, r in records["query"] if k % len(sqls) == j] for j in range(len(sqls))]
+    shapes = [v for v in shapes if v]
+    query_p50_ms = sum(common.median(v) for v in shapes) / max(1, len(shapes))
+    work_s = (common.median(dash_ms) + query_p50_ms) / 1000.0
     ctx.detail.update({
         "work_s": work_s,
         "refreshes": len(dash_ms),
@@ -512,7 +544,7 @@ def serving(ctx) -> float:
         "query_samples_ms": query_ms,
         "dash_p50_ms": common.median(dash_ms),
         **_tail_detail("dash_tail", dash_ms),
-        "query_p50_ms": common.median(query_ms),
+        "query_p50_ms": query_p50_ms,
         **_tail_detail("query_tail", query_ms),
     })
     late = [r.late for kind in kinds for _, r in records[kind]]
@@ -524,7 +556,7 @@ def serving(ctx) -> float:
     panel_answers = sum(routes.values())
     for route in ("rollup", "pruned", "raw"):
         ctx.layers[f"serving.route_share.{route}"] = routes.get(route, 0) / panel_answers if panel_answers else 0.0
-    ctx.detail["requests"] = SERVING_WARMUP_ROUNDS * len(kinds) + 2 * len(dash_ms) + len(query_ms)
+    ctx.detail["requests"] = SERVING_WARMUP_ROUNDS * (2 + len(sqls)) + 2 * len(dash_ms) + len(query_ms)
     return work_s
 
 
