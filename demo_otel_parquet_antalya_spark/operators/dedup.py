@@ -20,7 +20,7 @@ Python in any hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from demo_otel_parquet_antalya_spark.functions.text import fingerprint, word_shingles
@@ -486,7 +486,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    broadcast_state_max: int | None = None,
 ) -> DataFrame:
     """(id, cluster_id) for every id in ``pairs``: cluster_id = min id in the
     connected component. Turns near-dup PAIRS into dedup GROUPS (pick the
@@ -498,16 +497,16 @@ def connected_components(
     O(diameter) — chains of pairwise-similar docs (the classic boilerplate
     case) stay cheap. Each round is one shuffle join; lineage is truncated
     with localCheckpoint so plans don't grow exponentially. Iteration stops
-    at the first round with zero label changes.
+    at the first round with zero label changes, or after ``max_iter``
+    rounds as a safety bound.
 
     Near-dup graphs are edge-sparse (the near-dup sliver), so every round's
-    join is small regardless of corpus size.
+    join is small regardless of corpus size, and the label table (one row
+    per node) is usually broadcast-sized; past the derived broadcast limit
+    the neighbor join runs against a persist()ed dst-partitioned edge
+    layout instead (graph._iterate).
     """
-    from demo_otel_parquet_antalya_spark.operators.graph import (
-        _iter_layout,
-        _pick_small,
-        _state_side,
-    )
+    from demo_otel_parquet_antalya_spark.operators.graph import _iterate
 
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = (
@@ -518,98 +517,39 @@ def connected_components(
     labels = (
         edges.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
     ).localCheckpoint(eager=True)
-    # near-dup pair graphs are the edge-sparse sliver, so the label table
-    # (one row per node) is usually broadcast-sized; past the limit (r12:
-    # derived from state bytes vs the session's broadcast threshold — see
-    # graph.derived_broadcast_state_max) the neighbor join runs against a
-    # persist()ed dst-partitioned edge layout instead (partitioning
-    # survives persist, NOT localCheckpoint — the r11 finding)
-    _, small = _pick_small(labels, "id", broadcast_state_max)
-
-    # convergence test: least()-only updates mean labels never move once at
-    # fixpoint, so the multiset of labels is unchanged iff the round was a
-    # no-op — detected by one exact decimal aggregate over xxhash64(comp)
-    # per round instead of an old-vs-new join. xxhash64 is type-agnostic
-    # (ids may be strings — a numeric cast threw / nulled under ANSI,
-    # ADVICE r4 #1) and the decimal(38,0) sum can't overflow at corpus
-    # scale. A premature exit needs the per-row hash deltas of a changed
-    # round to sum to exactly 0 across 2^64 space — negligible.
-    def _label_sum(df):
-        return df.agg(F.sum(F.xxhash64("comp").cast("decimal(38,0)"))).first()[0]
-
-    # the initial sum runs BEFORE the layout is built: a Spark job between
-    # _iter_layout and the try would leak the CacheManager entry on failure
-    # — the finally below only releases a layout that exists (ADVICE r11).
-    # It also guards the per-round Observation fusion below: an EMPTY pair
-    # set (sum None) returns here, so the observed frames are always
-    # non-empty and AQE's empty-relation propagation can never eliminate a
-    # CollectMetrics whose .get we then block on (the SURVEY §7.14
-    # src_hwm/Observation failure class).
-    prev_sum = _label_sum(labels)
-    if prev_sum is None:
-        return labels.select("id", F.col("comp").alias("cluster_id"))
-    # self-loops (r15 optimization round): one (n, n) edge per node makes
-    # the neighbor-min aggregate include the node's own label, so the
-    # separate hop = labels LEFT JOIN nbr_min + least() pass — one
-    # node-sized join (and its broadcast materialization job) per round —
-    # disappears; the per-round min over {own comp} ∪ {neighbor comps} is
-    # IDENTICAL, hence so are every round's labels and the convergence
-    # round count. Measured at sf0.1: er_golden_records 43 -> 38 jobs.
-    # (An agg-key edge layout on the broadcast path was A/B'd too and
-    # REJECTED for CC: the near-dup edge frame is sliver-sized, so the
-    # partial-agg exchange it removes is tiny while the persisted layout
-    # added a repartition job and 32 near-empty tasks per round — wall
-    # 3.5 -> 4.4 s; see graph._iter_layout. label_propagation, whose
-    # per-round exchange is EDGE-sized votes, keeps that layout.)
+    # One (n, n) self-loop edge per node makes the neighbor-min aggregate
+    # include the node's own label, so no separate labels-LEFT-JOIN-
+    # neighbor-min pass (a node-sized join and its broadcast job per round)
+    # is needed: the per-round min over {own comp} ∪ {neighbor comps} is
+    # the same, hence so are every round's labels and the round count.
     edges_aug = edges.unionAll(
         labels.select(F.col("id").alias("src"), F.col("id").alias("dst"))
     )
-    edges = _iter_layout(edges_aug, "dst", small)
-    try:
-        for i in range(max_iter):
-            hop = (
-                edges.join(_state_side(labels, small), edges.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("comp").alias("comp"))
-                .select(F.col("src").alias("id"), "comp")
-            )
-            # pointer jumping: comp <- label(comp)
-            lut = labels.select(
-                F.col("id").alias("comp"), F.col("comp").alias("comp2")
-            )
-            # the convergence sum rides the checkpoint materialization as an
-            # observed metric (r14 optimization round): the separate
-            # _label_sum action per round was a second full pass over the
-            # label table — one extra job per round here, one extra
-            # node-table scan per round at warehouse scale. Observed
-            # metrics fire on eager localCheckpoint (probe-verified, value
-            # equal to the plain aggregate); labels is non-empty (guarded
-            # above) and the left joins preserve its rows, so the metric
-            # always arrives.
-            obs = Observation(f"cc_round_{i}")
-            jumped = (
-                hop.join(_state_side(lut, small), "comp", "left")
-                .select(
-                    "id",
-                    F.least("comp", F.coalesce("comp2", F.col("comp"))).alias("comp"),
-                )
-                .observe(
-                    obs,
-                    F.sum(F.xxhash64("comp").cast("decimal(38,0)")).alias("s"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            labels = jumped
-            new_sum = obs.get["s"]
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-    finally:
-        # jumped labels are checkpointed every round, so the returned
-        # plan never references the persist()ed layout — release it
-        # even on a mid-round failure (CacheManager entries are not
-        # GC-freed, unlike checkpointed RDDs)
-        edges.unpersist()
+
+    def step(labels, loop, i):
+        edges = loop.edges[0]
+        hop = (
+            edges.join(loop.side(labels), edges.dst == labels.id)
+            .groupBy("src")
+            .agg(F.min("comp").alias("comp"))
+            .select(F.col("src").alias("id"), "comp")
+        )
+        # pointer jumping: comp <- label(comp)
+        lut = labels.select(F.col("id").alias("comp"), F.col("comp").alias("comp2"))
+        return hop.join(loop.side(lut), "comp", "left").select(
+            "id",
+            F.least("comp", F.coalesce("comp2", F.col("comp"))).alias("comp"),
+        )
+
+    # Convergence: least()-only updates mean labels never move once at the
+    # fixpoint, so the label multiset is unchanged iff the round was a
+    # no-op. The driver tests that with one hash sum per round observed on
+    # the round's checkpoint, instead of an old-vs-new join or a second
+    # pass over the labels. A premature exit needs a changed round's
+    # per-row hash deltas to sum to exactly 0 across 2^64 space.
+    labels, _ = _iterate(
+        labels, "id", labels, max_iter, step, edges=edges_aug, by=("dst",), converge="comp"
+    )
     return labels.select("id", F.col("comp").alias("cluster_id"))
 
 

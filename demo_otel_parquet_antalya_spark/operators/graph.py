@@ -1,4 +1,5 @@
-"""Graph analytics over relational edge lists: weighted PageRank.
+"""Graph analytics over relational edge lists: weighted PageRank, HITS,
+triangle counts, k-core peeling and label propagation.
 
 Complements ``dedup.connected_components`` (the other iterative graph
 operator): CC answers "which nodes belong together", PageRank answers
@@ -10,9 +11,9 @@ Brin, Motwani, Winograd 1999).
 Scale shape: one edge-list equi-join + one keyed aggregation per
 iteration, with the iteration count FIXED (not convergence-tested) so the
 result is a deterministic function of the edge list — which is what lets
-a relational oracle replay it as K unrolled join+aggregate rounds. Each
-round's lineage is truncated with localCheckpoint, exactly like the CC
-loop; the edge frame and out-degree table are computed once and cached.
+a relational oracle replay it as K unrolled join+aggregate rounds. The
+rounds run through the iteration driver below, as do the other loops and
+the CC loop; the edge frame and out-degree table are computed once.
 
 Semantics (standard damped PageRank on a WEIGHTED directed graph):
   rank_0(n)   = 1 / N
@@ -25,54 +26,48 @@ variant; the oracle mirrors it exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-# Per-round state tables (ranks / hub-authority scores / labels) hold ONE
-# row per node. At or below a limiting node count the state is BROADCAST
-# into the static edge frame — the fastest measured small-graph shape (no
-# edge-side exchange, no second edge layout, trade graph at sf0.1: 9.6 s vs
-# 10.3 s end-to-end). Above it a multi-MB broadcast per half-step loses to
-# exchanging the state table, so the edge list is hash-partitioned on the
-# per-round join key and persist()ed: an InMemoryTableScan REPORTS its
-# child's outputPartitioning, so every round's ShuffledHashJoin reuses the
-# layout with zero edge-side exchange or sort (10M-edge/4M-node synthetic:
-# iteration wall halves vs the checkpoint shape). label_propagation is the
-# one exception on the broadcast path (r15): its per-round aggregate is
-# keyed on an EDGE-cardinality key (votes), so it lays the augmented edge
-# frame out by the aggregate key even when state broadcasts — see
-# _iter_layout.
+# The iterative operators (pagerank, hits, k_core, label_propagation and
+# dedup.connected_components) all run through _iterate, which makes the
+# four choices they share:
 #
-# The limit itself is DERIVED from the session (r12, VERDICT r11 #4): node
-# count was only ever a proxy for state BYTES vs broadcast cost, and the
-# r11 100k constant was a box measurement that would be wrong in one
-# direction or the other on any real cluster. Estimated per-row state
-# bytes (measured avg key width + 8 for the score/label) against the
-# session's own spark.sql.autoBroadcastJoinThreshold, scaled down by the
-# executor count (every executor holds a full copy, while the shuffle
-# alternative moves the node-sized state once) — see
-# derived_broadcast_state_max. The r11 bracketing points stay correctly
-# classified by the derived default (~131k at the stock 10 MiB threshold
-# on one executor: 48k nodes/1.8M edges broadcast-wins 5.5 s vs 9.7 s;
-# 160k nodes/4.4M edges partitioned-wins 12.1 s vs 15.5 s) without the
-# hand-tuned constant. Set this module global to an int to pin the old
-# fixed-limit behavior session-wide, or pass broadcast_state_max per call.
-#
-# localCheckpoint CANNOT serve the partitioned path: a checkpointed frame
-# scans back as ExistingRDD with UnknownPartitioning(0), so the previous
-# "pre-partition the edge list once, every iteration reuses this layout"
-# comments here were FALSE — each round silently re-exchanged AND re-sorted
-# the full edge list (found by the r11 profile of graph_hits_trade).
-BROADCAST_STATE_MAX: int | None = None
+# - Where the per-round state lives. The state table (ranks, scores,
+#   labels) has one row per node. While it is small it is BROADCAST into
+#   the static edge frame: no edge-side exchange and no second copy of the
+#   edges. Past that size a broadcast per half-step costs more than
+#   shuffling the node-sized state once, so the edge list is
+#   hash-partitioned on the round's join key and persist()ed. An
+#   InMemoryTableScan reports its child's outputPartitioning, so every
+#   round's shuffled-hash join streams the layout with no edge-side
+#   exchange or sort. localCheckpoint cannot serve here: a checkpointed
+#   frame scans back with UnknownPartitioning, and every round would
+#   re-exchange and re-sort the full edge list. _pick_small chooses from
+#   the node count and the session's spark.sql.autoBroadcastJoinThreshold
+#   (derived_broadcast_state_max); nothing else selects the path.
+# - How long the edge layouts live. A persist()ed frame is a CacheManager
+#   entry that outlives the DataFrame (checkpointed RDDs are freed by the
+#   ContextCleaner, cache entries are not), so the driver releases every
+#   layout it built, whether the loop finishes or fails.
+# - When lineage is cut. An eager localCheckpoint stops the plan from
+#   growing with the round count; each loop states its cadence at the call
+#   site. While layouts are held the last round is always cut, so the
+#   returned plan never reads a released layout.
+# - When to stop. Fixed-round loops run every round, because their
+#   relational oracles replay exactly that many; connected_components stops
+#   at the first round that leaves its label multiset unchanged.
 
 # In-memory + build overhead per broadcast-hash-relation entry beyond the
 # key/value payload: the UnsafeRow object + BytesToBytesMap entry pointers
 # + load-factor slack. 64 B is deliberately conservative (Spark's own
 # relation builds run ~40-80 B/entry depending on key type); with the
 # +8 B score and 8-20 B keys it puts the stock-conf single-executor
-# crossover at ~120-130k nodes, inside the r11 measured bracket
-# (48k broadcast-wins, 160k partitioned-wins).
+# crossover at ~120-130k nodes, between the measured bracketing points
+# (48k nodes: broadcast faster; 160k nodes: partitioned faster).
 HASH_RELATION_ROW_BYTES = 64
 
 # UnsafeRow fixed-width types: 8 bytes in the row regardless of rendered
@@ -89,14 +84,18 @@ def derived_broadcast_state_max(spark, avg_key_bytes: float = 8.0) -> int:
       threshold_bytes / ((HASH_RELATION_ROW_BYTES + avg_key_bytes + 8)
                          × executor_count)
 
-    ``spark.sql.autoBroadcastJoinThreshold`` is the cluster's own stated
-    judgment of how large a broadcast relation may be; a disabled
-    threshold (<= 0) is honored — the operator never broadcasts state the
-    planner was told not to. Executor count scales the allowance down
-    because every executor receives a full copy of the per-round state
-    while the partitioned-layout alternative moves it across the cluster
-    once — on a 100-executor cluster the derived limit is 100× smaller,
-    which errs toward the scale-safe partitioned path."""
+    Node count is only a proxy for state bytes against broadcast cost, so
+    the limit is stated in bytes. ``spark.sql.autoBroadcastJoinThreshold``
+    is the cluster's own stated judgment of how large a broadcast relation
+    may be; a disabled threshold (<= 0) is honored — the operator never
+    broadcasts state the planner was told not to. Executor count scales
+    the allowance down because every executor receives a full copy of the
+    per-round state while the partitioned-layout alternative moves it
+    across the cluster once — on a 100-executor cluster the derived limit
+    is 100× smaller, which errs toward the scale-safe partitioned path.
+    At the stock 10 MiB threshold on one executor it is ~131k nodes: 48k
+    nodes / 1.8M edges measured faster broadcast (5.5 s vs 9.7 s), 160k
+    nodes / 4.4M edges faster partitioned (12.1 s vs 15.5 s)."""
     raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     try:
         thresh = int(raw)
@@ -111,9 +110,9 @@ def derived_broadcast_state_max(spark, avg_key_bytes: float = 8.0) -> int:
     n_exec = max(
         1, spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size() - 1
     )
-    # Dynamic-allocation floor (VERDICT r12): at job start an autoscaling
-    # cluster's REGISTERED count can read low (executors not yet granted),
-    # which RAISES the derived limit — the unsafe direction, because the
+    # Dynamic-allocation floor: at job start an autoscaling cluster's
+    # REGISTERED count can read low (executors not yet granted), which
+    # RAISES the derived limit — the unsafe direction, because the
     # broadcast lands on every executor the cluster scales up to. When the
     # session declares a scaling ceiling, size against it instead of the
     # momentary registration; a ceiling left at Spark's infinity default
@@ -139,12 +138,10 @@ def derived_broadcast_state_max(spark, avg_key_bytes: float = 8.0) -> int:
     return int(thresh // (row_bytes * n_exec))
 
 
-def _pick_small(nodes: DataFrame, key: str, broadcast_state_max) -> tuple[int, bool]:
-    """(node count, use-broadcast-state?) in ONE aggregate job over the
-    node-sized frame: the count every loop already paid, fused with the
-    average UnsafeRow key width the derived limit needs. Resolution order:
-    explicit per-call limit, then a pinned module global, then the
-    conf-derived default."""
+def _pick_small(nodes: DataFrame, key: str) -> tuple[int, bool]:
+    """(node count, broadcast the state?) from ONE aggregate job over the
+    node-sized frame: the node count, fused with the average UnsafeRow key
+    width that derived_broadcast_state_max turns into a node limit."""
     dt = dict(nodes.dtypes).get(key)
     if dt in _FIXED_WIDTH_8:
         width = F.lit(8.0)
@@ -153,53 +150,116 @@ def _pick_small(nodes: DataFrame, key: str, broadcast_state_max) -> tuple[int, b
         width = F.octet_length(F.col(key).cast("string")) + F.lit(8.0)
     row = nodes.agg(F.count("*").alias("n"), F.avg(width).alias("w")).first()
     n_nodes = int(row.n)
-    limit = broadcast_state_max
-    if limit is None:
-        limit = BROADCAST_STATE_MAX
-    if limit is None:
-        limit = derived_broadcast_state_max(
-            nodes.sparkSession, float(row.w) if row.w is not None else 8.0
-        )
+    limit = derived_broadcast_state_max(
+        nodes.sparkSession, float(row.w) if row.w is not None else 8.0
+    )
     return n_nodes, n_nodes <= limit
 
 
-def _iter_layout(e: DataFrame, key: str, small: bool = False) -> DataFrame:
-    """The static edge frame an iterative operator joins every round:
-    the already-materialized canonical frame itself when the per-node
-    state is broadcast-sized (the probe side's layout is irrelevant under
-    a broadcast join), else a persist()ed hash layout on ``key`` —
-    persist preserves outputPartitioning where localCheckpoint erases it
-    (see ``BROADCAST_STATE_MAX``). The key is the per-round JOIN key on
-    the partitioned-state path (the node-sized state shuffles into the
-    layout, zero edge-side exchange). Callers whose per-round aggregate
-    is keyed on an EDGE-cardinality key (label_propagation's vote stream)
-    pass small=False with the AGGREGATE key instead, which makes the
-    keyed count above the broadcast join exchange-free — measured A/B in
-    the r15 optimization round: a win exactly when the per-round exchange
-    it removes is edge-sized (LP votes), a loss when it is node-sized
-    partials (pagerank/HITS contribs: +1 layout shuffle, 32 near-empty
-    tasks per round, jobs +2 — rejected for those)."""
-    if small:
-        return e
-    out = e.repartition(key).persist(StorageLevel.MEMORY_AND_DISK)
+def _multiset_hash(col: str):
+    # xxhash64 is type-agnostic (ids may be strings, which a numeric cast
+    # would throw on or null under ANSI), and a decimal(38,0) sum of 64-bit
+    # hashes cannot overflow at corpus scale
+    return F.sum(F.xxhash64(col).cast("decimal(38,0)"))
+
+
+class _Loop(NamedTuple):
+    """What _iterate decided, handed to every step: the node count,
+    whether the state broadcasts, and the edge frames the steps join (the
+    persisted layouts in the order asked for, else the given frame)."""
+
+    n_nodes: int
+    small: bool
+    edges: tuple
+
+    def side(self, state: DataFrame) -> DataFrame:
+        """How the state table enters an edge join: broadcast when small;
+        else a shuffle_hash hint — build the per-partition hash from the
+        node-sized state and stream the partition-aligned layout, sorting
+        neither side."""
+        return F.broadcast(state) if self.small else state.hint("shuffle_hash")
+
+
+def _iterate(
+    nodes: DataFrame,
+    key: str,
+    state,
+    rounds: int,
+    *steps,
+    every: int = 1,
+    edges: DataFrame | None = None,
+    by: tuple[str, ...] = (),
+    small_by: tuple[str, ...] = (),
+    cut_last: bool = False,
+    converge: str | None = None,
+):
+    """Run up to ``rounds`` rounds of ``steps`` from ``state``; return the
+    last round's step outputs, then the _Loop.
+
+    ``nodes``/``key``: the node-sized frame the broadcast choice is made
+    on (one aggregate job, _pick_small).
+
+    ``edges``/``by``/``small_by``: the static edge frame, and the keys to
+    persist a hash layout of it on for the partitioned / broadcast path.
+    The key is the round's JOIN key on the partitioned path, so the state
+    shuffles into the layout and the edges never move. On the broadcast
+    path the probe side's layout is irrelevant to the join, so a layout
+    pays only when the round's aggregate key is edge-cardinality
+    (label_propagation's votes: the keyed counts run exchange-free); where
+    the exchange it would remove is node-sized partials (pagerank, HITS)
+    or the edge frame is a sliver (connected_components) it costs a
+    repartition job and near-empty tasks every round, so those loops ask
+    for none. With no keys the steps join ``edges`` itself.
+
+    ``steps``: each is called as step(frame, loop, i) with the previous
+    step's output — the previous round's last output for the first — and
+    returns the next frame. HITS passes one step per half-round.
+
+    Cuts: the round's last output every ``every`` rounds, except the last
+    round, which is cut when ``cut_last`` (the result reads it more than
+    once) or — every step's output, before the next step reads it — while
+    layouts are held. ``converge`` names a label column: each round's
+    output carries an observed hash sum of that column's values, it is
+    cut, and the loop stops at the first round that leaves the sum
+    unchanged; an empty initial state runs no round, so no metric is ever
+    awaited on a frame that AQE could prune away."""
+    n_nodes, small = _pick_small(nodes, key)
+    if converge is not None:
+        prev = state.agg(_multiset_hash(converge)).first()[0]
+        if prev is None:
+            return state, _Loop(n_nodes, small, ())
+    layouts = []
     try:
-        out.count()  # materialize now: rounds must reuse, never recompute
-    except BaseException:
-        # a failed materialization must not leave the CacheManager entry
-        # registered for the session's lifetime (code-review r11, third
-        # pass: the callers' finally blocks only cover layouts that were
-        # successfully built)
-        out.unpersist()
-        raise
-    return out
-
-
-def _state_side(state: DataFrame, small: bool) -> DataFrame:
-    """How the per-round state table enters an edge join: broadcast when
-    the node count is small; else a shuffle_hash hint — build the
-    per-partition hash from the (node-sized) state side and STREAM the
-    partition-aligned persisted edges, sorting neither side."""
-    return F.broadcast(state) if small else state.hint("shuffle_hash")
+        for col in small_by if small else by:
+            layouts.append(edges.repartition(col).persist(StorageLevel.MEMORY_AND_DISK))
+            layouts[-1].count()  # materialize now: rounds reuse it, never recompute
+        loop = _Loop(n_nodes, small, tuple(layouts) or (edges,) * max(1, len(by)))
+        outs = [state]
+        for i in range(rounds):
+            last = i + 1 == rounds
+            outs = []
+            for j, step in enumerate(steps, 1):
+                state = step(state, loop, i)
+                end = j == len(steps)
+                if end and converge is not None:
+                    obs = Observation(f"round_{i}")
+                    state = state.observe(obs, _multiset_hash(converge).alias("s"))
+                if (
+                    last and layouts
+                    or end and converge is not None
+                    or end and (i + 1) % every == 0 and (cut_last or not last)
+                ):
+                    state = state.localCheckpoint(eager=True)
+                outs.append(state)
+            if converge is not None:
+                now = obs.get["s"]
+                if now == prev:
+                    break
+                prev = now
+        return (*outs, loop)
+    finally:
+        for layout in layouts:
+            layout.unpersist()
 
 
 def pagerank(
@@ -209,8 +269,6 @@ def pagerank(
     weight: str | None = None,
     k: int = 6,
     damping: float = 0.85,
-    checkpoint_interval: int = 3,
-    broadcast_state_max: int | None = None,
 ) -> DataFrame:
     """(node, rank) after exactly ``k`` damped power-iteration rounds.
 
@@ -218,12 +276,12 @@ def pagerank(
     edge's contribution, default 1.0. Parallel edges are legal (their
     weights add). Deterministic given the edge list: fixed iteration
     count, no convergence test — by design, so relational oracles can
-    replay the exact computation. Below ``broadcast_state_max`` nodes the
-    contrib table is broadcast into the canonical edge frame each round;
-    above it the edge list is persist()ed hash-partitioned on ``src`` and
-    each round shuffle-hash-joins the contrib table into that layout —
-    both paths compute the identical result (see ``BROADCAST_STATE_MAX``
-    for why the old checkpoint-the-partitioned-frame shape was wrong).
+    replay the exact computation. While the node count is under the
+    derived broadcast limit the contrib table is broadcast into the
+    canonical edge frame each round; above it the edge list is
+    persist()ed hash-partitioned on ``src`` and each round
+    shuffle-hash-joins the contrib table into that layout — both paths
+    compute the identical result (see _iterate).
     """
     e = edges.select(
         F.col(src).alias("src"),
@@ -251,58 +309,42 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # one bounded aggregate: node count + avg key width for the derived limit
-    n_nodes, small = _pick_small(nodes, "node", broadcast_state_max)
-    e = _iter_layout(e, "src", small)
-    base = (1.0 - damping) / n_nodes
 
     # Per round, only the CONTRIB table (dst, c) is materialized; a node's
     # rank is reconstructed inline as base + damping * coalesce(c, 0)
     # wherever needed (sources with no in-edges have c = NULL -> the
     # teleport share). This halves the joins per round vs materializing a
     # full (node, rank) frame: one edges-left-join-contrib + one keyed sum.
-    def rank_of(c_col):
+    def rank_of(c_col, n_nodes):
+        base = (1.0 - damping) / n_nodes
         return F.lit(base) + F.lit(damping) * F.coalesce(c_col, F.lit(0.0))
 
-    contrib = None
-    try:
-        for i in range(k):
-            if contrib is None:
-                joined = e.withColumn("rank", F.lit(1.0 / n_nodes))
-            else:
-                joined = e.join(
-                    _state_side(contrib, small), e.src == contrib.node_c, "left"
-                ).withColumn("rank", rank_of(F.col("c")))
-            contrib = (
-                joined.select("dst", (F.col("rank") * F.col("p")).alias("cc"))
-                .groupBy("dst")
-                .agg(F.sum("cc").alias("c"))
-                .select(F.col("dst").alias("node_c"), "c")
-            )
-            # checkpoint_interval=3 re-adjudicated in the r15 optimization
-            # round (the r11 "fuse" vs r13 "don't fuse" conflict): with
-            # numeric node keys and contrib-only rounds, fusing 3 rounds
-            # per truncation runs the SAME exchanges in one query — every
-            # shuffle/broadcast is still its own AQE stage, so no work is
-            # re-evaluated — while dropping the per-round materialization
-            # barriers: 26 -> 18 jobs, wall best-of-4 2.54 -> 1.72-1.87 s
-            # at sf0.1 (interval 6 saves 6 more jobs but the depth-6 plan
-            # re-plans measurably slower on first run — 5.9 s). The knob
-            # stays for clusters where plan depth is costlier than
-            # materialization. On the big path the final round checkpoints too:
-            # the node-sized checkpoint cuts the returned plan off the
-            # persist()ed layout so the finally can release it (CacheManager
-            # entries outlive the frame, unlike checkpointed RDDs, which
-            # the ContextCleaner frees on GC)
-            if (i + 1) % checkpoint_interval == 0 and (i + 1 < k or not small):
-                contrib = contrib.localCheckpoint(eager=True)
-        if not small and k % checkpoint_interval != 0:
-            contrib = contrib.localCheckpoint(eager=True)
-    finally:
-        if not small:
-            e.unpersist()
+    def step(contrib, loop, i):
+        e = loop.edges[0]
+        if contrib is None:
+            joined = e.withColumn("rank", F.lit(1.0 / loop.n_nodes))
+        else:
+            joined = e.join(
+                loop.side(contrib), e.src == contrib.node_c, "left"
+            ).withColumn("rank", rank_of(F.col("c"), loop.n_nodes))
+        return (
+            joined.select("dst", (F.col("rank") * F.col("p")).alias("cc"))
+            .groupBy("dst")
+            .agg(F.sum("cc").alias("c"))
+            .select(F.col("dst").alias("node_c"), "c")
+        )
+
+    # Cut every 3 rounds: with numeric keys and contrib-only rounds, three
+    # rounds in one plan run the same exchanges (each shuffle or broadcast
+    # is still its own AQE stage, so nothing is evaluated twice) while
+    # dropping two materialization barriers per cut — at sf0.1 26 -> 18
+    # jobs and 2.54 -> 1.72-1.87 s. Six rounds per cut saves six more jobs
+    # but the deeper plan takes measurably longer to plan on a first run.
+    contrib, loop = _iterate(
+        nodes, "node", None, k, step, every=3, edges=e, by=("src",)
+    )
     return nodes.join(contrib, nodes.node == contrib.node_c, "left").select(
-        "node", rank_of(F.col("c")).alias("rank")
+        "node", rank_of(F.col("c"), loop.n_nodes).alias("rank")
     )
 
 
@@ -311,8 +353,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     k: int = 4,
-    checkpoint_interval: int = 2,
-    broadcast_state_max: int | None = None,
 ) -> DataFrame:
     """(node, hub, authority) after exactly ``k`` HITS rounds (Kleinberg
     1999, "Authoritative sources in a hyperlinked environment") on the
@@ -326,22 +366,21 @@ def hits(
     scale-invariant); the final normalized (hub, authority) are identical
     in exact arithmetic, and doubles don't overflow for any realistic k
     (mass grows ~avg-degree per half-step: degree 1e4, k=4 -> ~1e32 <<
-    DBL_MAX). This removes every per-round normalizer aggregate — the r4
-    wall-clock was dominated by 8 materialized normalized frames.
+    DBL_MAX). This removes every per-round normalizer aggregate, which
+    would otherwise add a materialized frame per half-step.
 
     Fixed iteration count, hub_0 = 1.0 — deterministic, so a relational
     oracle replays it as k unrolled raw join+aggregate rounds plus one
     final normalization. Nodes with no out-edges have hub 0, no in-edges
     authority 0 (coalesced at the end).
 
-    Scale shape identical to pagerank's rounds: below
-    ``broadcast_state_max`` nodes the score tables are broadcast into ONE
-    canonical edge frame (no dst layout needed — a broadcast join ignores
-    the probe side's layout); above it the edge list is persist()ed twice
+    Scale shape identical to pagerank's rounds: under the derived
+    broadcast limit the score tables are broadcast into ONE canonical
+    edge frame (no dst layout needed — a broadcast join ignores the probe
+    side's layout); above it the edge list is persist()ed twice
     (hash-partitioned on src and on dst) and each half-step
     shuffle-hash-joins only the score table into the matching layout.
-    ``checkpoint_interval`` counts HALF-steps between lineage truncations
-    (2 = once per full round).
+    Lineage is cut after each round's hub half-step.
     """
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -354,50 +393,31 @@ def hits(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    _, small = _pick_small(nodes, "node", broadcast_state_max)
-    # both layouts default to the canonical frame so the finally below can
-    # tell "built" from "not yet built": if the SECOND layout's
-    # materialization fails, the first must still be released
-    # (code-review r11, third pass)
-    e_by_src = e_by_dst = e
 
-    h = nodes.select("node", F.lit(1.0).alias("s"))
-    a = None
-    step = 0
-    try:
-        if not small:
-            e_by_src = _iter_layout(e, "src", small)
-            e_by_dst = _iter_layout(e, "dst", small)
-        for i in range(k):
-            a = (
-                e_by_src.join(_state_side(h, small), e_by_src.src == h.node)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("s").alias("s"))
-            )
-            step += 1
-            # on the big path the FINAL round's a must checkpoint before h
-            # consumes it: the post-loop checkpoints would otherwise run
-            # the last a-join twice (once inside h's job, once for a's own)
-            if step % checkpoint_interval == 0 or (not small and i + 1 == k):
-                a = a.localCheckpoint(eager=True)
-            h = (
-                e_by_dst.join(_state_side(a, small), e_by_dst.dst == a.node)
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.sum("s").alias("s"))
-            )
-            step += 1
-            if step % checkpoint_interval == 0 and i + 1 < k:
-                h = h.localCheckpoint(eager=True)
-        if not small:
-            # the final node-sized checkpoint cuts the returned plan off the
-            # persist()ed layouts so the finally below can release them —
-            # CacheManager entries are not GC-freed, and leaving them would
-            # leak two edge-list copies per call
-            h = h.localCheckpoint(eager=True)
-    finally:
-        for layout in (e_by_src, e_by_dst):
-            if layout is not e:
-                layout.unpersist()
+    def half_step(layout, state, loop, on, to):
+        # sum the state score over the layout's ``on`` endpoint into ``to``
+        return (
+            layout.join(loop.side(state), layout[on] == state.node)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum("s").alias("s"))
+        )
+
+    def authority(h, loop, i):
+        return half_step(loop.edges[0], h, loop, "src", "dst")
+
+    def hub(a, loop, i):
+        return half_step(loop.edges[1], a, loop, "dst", "src")
+
+    a, h, _ = _iterate(
+        nodes,
+        "node",
+        nodes.select("node", F.lit(1.0).alias("s")),
+        k,
+        authority,
+        hub,
+        edges=e,
+        by=("src", "dst"),
+    )
 
     def _l1(scores: DataFrame, out: str) -> DataFrame:
         # one final normalization per score family: 1-row broadcast
@@ -512,7 +532,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 6,
-    broadcast_state_max: int | None = None,
 ) -> DataFrame:
     """(node, degree) for the nodes surviving ``rounds`` peel iterations
     of the k-core reduction on the UNDIRECTED simple graph (direction,
@@ -534,16 +553,17 @@ def k_core(
 
     Scale shape: per round one keyed degree aggregate + one semi-join per
     endpoint against the node-sized survivor set, each on a monotonically
-    SHRINKING edge frame (work decays with the periphery); lineage
-    truncated per round via localCheckpoint. Below ``broadcast_state_max``
-    nodes the survivor set is pinned broadcast (the edge frame never
-    shuffles for the joins); above it the joins are left UNHINTED — the
-    edge frame is rebuilt each round so a persisted layout cannot
-    amortize here the way the fixed-edge loops' can, and a shuffle_hash
-    hint measured SLOWER at 10x/100x than letting AQE convert the join
-    itself: the survivor set usually shrinks under the runtime broadcast
-    threshold, and the hint would pin the join to a shuffle AQE knows it
-    can skip. No windows, nothing collected.
+    SHRINKING edge frame (work decays with the periphery); lineage is cut
+    every round, the last included, because the result reads the final
+    edge frame twice. Under the derived broadcast limit the survivor set
+    is pinned broadcast (the edge frame never shuffles for the joins);
+    above it the joins are left UNHINTED and no layout is persisted — the
+    edge frame is rebuilt each round so a layout cannot amortize here the
+    way the fixed-edge loops' can, and a shuffle_hash hint measured
+    SLOWER at 10x/100x than letting AQE convert the join itself: the
+    survivor set usually shrinks under the runtime broadcast threshold,
+    and the hint would pin the join to a shuffle AQE knows it can skip.
+    No windows, nothing collected.
     """
     u, v = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
     e = (
@@ -552,6 +572,7 @@ def k_core(
         .distinct()
         .localCheckpoint(eager=True)
     )
+
     def degrees(frame: DataFrame) -> DataFrame:
         return (
             frame.select(F.col("u").alias("node"))
@@ -562,23 +583,19 @@ def k_core(
 
     # the broadcast decision needs the node stats, and round 1 needs the
     # degree table — ONE checkpointed frame answers both (a separate
-    # distinct+count pass would cost an extra full-edge job; code-review
-    # r11, third pass)
+    # distinct+count pass would cost an extra full-edge job)
     deg0 = degrees(e).localCheckpoint(eager=True)
-    _, small = _pick_small(deg0, "node", broadcast_state_max)
-    for i in range(rounds):
+
+    def step(e, loop, i):
         deg = deg0 if i == 0 else degrees(e)
         keep = deg.filter(F.col("deg") >= k).select("node")
         keep_u = keep.withColumnRenamed("node", "u")
         keep_v = keep.withColumnRenamed("node", "v")
-        if small:
+        if loop.small:
             keep_u, keep_v = F.broadcast(keep_u), F.broadcast(keep_v)
-        e = (
-            e.join(keep_u, "u", "semi")
-            .join(keep_v, "v", "semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
+        return e.join(keep_u, "u", "semi").join(keep_v, "v", "semi").select("u", "v")
+
+    e, _ = _iterate(deg0, "node", e, rounds, step, cut_last=True)
     return (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -593,7 +610,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 4,
-    broadcast_state_max: int | None = None,
 ) -> DataFrame:
     """(node, community) after exactly ``rounds`` synchronous label-
     propagation iterations (Raghavan-Albert-Kumara 2007) on the
@@ -607,12 +623,12 @@ def label_propagation(
     a chain of weakly-bridged duplicate cliques is one component but
     several propagation communities.
 
-    Scale shape: per round, below ``broadcast_state_max`` nodes the label
-    table is broadcast into the canonical edge frame; above it one
-    shuffle of the label table into the persist()ed ``v``-partitioned
-    edge layout (shuffle-hash, neither side sorted) — plus one keyed
-    count and one keyed min-struct argmax (no window, nothing collected);
-    lineage truncated per round.
+    Scale shape: per round, under the derived broadcast limit the label
+    table is broadcast into the edge frame laid out by the vote key ``u``;
+    above it one shuffle of the label table into the persist()ed
+    ``v``-partitioned edge layout (shuffle-hash, neither side sorted) —
+    plus one keyed count and one keyed min-struct argmax (no window,
+    nothing collected); lineage cut every round.
     """
     u, v = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
     und = (
@@ -628,42 +644,35 @@ def label_propagation(
     labels = e.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     ).localCheckpoint(eager=True)
-    _, small = _pick_small(labels, "node", broadcast_state_max)
-    # self-vote as a SELF-LOOP edge (r15): one (n, n) row per node folds
-    # the per-round unionAll(labels) into the single label join — the
-    # union had UnknownPartitioning, which forced a full vote-stream
-    # exchange every round; the augmented frame is static, so it is laid
-    # out once (aggregate key u on the broadcast-state path -> every
-    # round's two keyed aggregates run exchange-free; join key v on the
-    # partitioned-state path, as before) and the per-round vote multiset
-    # is IDENTICAL: the self-loop joins the node's own label exactly once.
+    # The self-vote is a SELF-LOOP edge: one (n, n) row per node makes the
+    # single label join deliver the node's own label exactly once, so the
+    # per-round vote multiset is the same as a separate unionAll(labels)
+    # would give. That union has UnknownPartitioning and would force a
+    # full exchange of the vote stream every round; the augmented frame is
+    # static, so it is laid out once. On the broadcast path the layout key
+    # is the votes' aggregate key u, and both keyed aggregates of every
+    # round run exchange-free.
     e_aug = e.unionAll(
         labels.select(F.col("node").alias("u"), F.col("node").alias("v"))
     )
-    e = _iter_layout(e_aug, "u" if small else "v")
-    try:
-        for _ in range(rounds):
-            votes = (
-                e.join(_state_side(labels, small), e.v == labels.node)
-                .select(F.col("u").alias("node"), "lbl")
-                .groupBy("node", "lbl")
-                .agg(F.count("*").alias("c"))
-            )
-            # argmax by (count desc, label asc) as a keyed min over a
-            # struct — stays in whole-stage codegen, no window
-            labels = (
-                votes.groupBy("node")
-                .agg(
-                    F.min(
-                        F.struct((-F.col("c")).alias("nc"), F.col("lbl"))
-                    ).alias("m")
-                )
-                .select("node", F.col("m.lbl").alias("lbl"))
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        # labels is checkpointed every round, so the returned plan never
-        # references the persist()ed layout — release it (CacheManager
-        # entries are not GC-freed)
-        e.unpersist()
+
+    def step(labels, loop, i):
+        e = loop.edges[0]
+        votes = (
+            e.join(loop.side(labels), e.v == labels.node)
+            .select(F.col("u").alias("node"), "lbl")
+            .groupBy("node", "lbl")
+            .agg(F.count("*").alias("c"))
+        )
+        # argmax by (count desc, label asc) as a keyed min over a
+        # struct — stays in whole-stage codegen, no window
+        return (
+            votes.groupBy("node")
+            .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("lbl"))).alias("m"))
+            .select("node", F.col("m.lbl").alias("lbl"))
+        )
+
+    labels, _ = _iterate(
+        labels, "node", labels, rounds, step, edges=e_aug, by=("v",), small_by=("u",)
+    )
     return labels.select("node", F.col("lbl").alias("community"))

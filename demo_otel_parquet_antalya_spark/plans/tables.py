@@ -19,8 +19,6 @@ from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 
-from demo_otel_parquet_antalya_spark.schema import TESTDATA_TABLES
-
 _RELATION_CACHE: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
 
 
@@ -59,14 +57,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     per_session[key] = df
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view (for spark.sql-based plans)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -33,6 +33,20 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, in whole GiB, at least 1g.
+
+    Local mode runs every task inside the driver JVM, so its heap is the
+    engine's working memory. It must still fit in RAM with room to spare:
+    the JVM's off-heap use (netty and Arrow buffers, metaspace, thread
+    stacks), the Python workers and the OS page cache live outside the
+    heap. A heap larger than physical memory is no larger budget: on a
+    host without swap the kernel kills the JVM once the heap grows past
+    RAM, and every later query on the session fails."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, phys // 2**31)}g"
+
+
 def get_spark(
     app_name: str = "demo-otel-parquet-antalya-spark",
     master: str | None = None,
@@ -66,8 +80,10 @@ def get_spark(
         # read parquet TIMESTAMP(NANOS) columns (e.g. events.ts) as long nanos;
         # the table loader converts to µs TimestampType (lossless for this data)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # generous local driver memory: local mode is driver-only
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )

@@ -99,10 +99,3 @@ def write_zordered(
         .parquet(path)
     )
 
-
-def files_touched(df_read: DataFrame) -> int:
-    """How many distinct files a (filtered) scan actually reads — the
-    file-skipping measurement used by the layout tests."""
-    return (
-        df_read.select(F.input_file_name().alias("f")).distinct().count()
-    )

@@ -56,6 +56,22 @@ def merge_components(prior: DataFrame, new_edges: DataFrame) -> DataFrame:
     """One incremental step: prior (id, cluster_id) labels + a batch of new
     (id_a, id_b) edges -> the labeling of the union graph. Pure function —
     the streaming sink below and the tests share it."""
+    # prior feeds three arms below (touched, affected, untouched), and the
+    # output may be chained back in as the next prior. Two things would
+    # then grow geometrically with the chain: the plan, which would carry
+    # every earlier step's plan three times over, and the size estimate.
+    # A checkpoint keeps the estimate of the plan it cuts, and
+    # connected_components' rounds multiply estimates (an inner join's is
+    # the product of its sides'), so the estimate's digit count, and the
+    # planning time with it, would multiply with every step. An eager
+    # checkpoint, re-wrapped as a plain row RDD that carries no inherited
+    # estimate, starts each step from a fresh leaf.
+    spark = prior.sparkSession
+    done = prior.localCheckpoint(eager=True)
+    prior = DataFrame(
+        spark._jsparkSession.createDataFrame(done._jdf.javaRDD(), done._jdf.schema()),
+        spark,
+    )
     new_e = new_edges.select(
         F.col("id_a").cast("long").alias("id_a"),
         F.col("id_b").cast("long").alias("id_b"),

@@ -126,12 +126,6 @@ def run_ingest_protobuf_once(
     q.awaitTermination()
 
 
-def read_warehouse_stream(spark: SparkSession, warehouse_root: str) -> DataFrame:
-    """Streaming scan of the warehouse (downstream consumers tail the table —
-    the file-sink metadata log makes this read exactly the committed files)."""
-    return spark.readStream.option("basePath", warehouse_root).parquet(warehouse_root)
-
-
 def streaming_severity_counts(logs: DataFrame, bucket_seconds: int = 30) -> DataFrame:
     """Continuous version of the Grafana time-series panel (reference Q5,
     logs.json:123): 30 s tumbling windows × service × severity with a

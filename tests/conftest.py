@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -19,3 +20,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMOKE)
+
+
+@pytest.fixture
+def broadcast_disabled(spark):
+    """Context manager that runs its block with
+    spark.sql.autoBroadcastJoinThreshold=-1 and restores the old value.
+    The graph loops derive a zero broadcast-state limit from it, so this
+    is how a test forces their partitioned-state path."""
+
+    @contextlib.contextmanager
+    def disabled():
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    return disabled

@@ -55,12 +55,11 @@ def test_parallel_edges_collapse_to_weight_sum(spark):
     assert many == pytest.approx(one)
 
 
-def test_deterministic_across_runs_and_checkpoint_interval(spark):
-    """Fixed-k contract: identical results run-to-run AND regardless of how
-    often lineage is checkpointed (the interval is perf-only)."""
+def test_deterministic_across_runs(spark):
+    """Fixed-k contract: identical results run-to-run."""
     rows = [("A", "B", 1.0), ("B", "C", 2.0), ("C", "A", 1.0), ("A", "C", 0.5)]
-    r1 = _ranks(spark, rows, k=6, checkpoint_interval=1)
-    r2 = _ranks(spark, rows, k=6, checkpoint_interval=3)
+    r1 = _ranks(spark, rows, k=6)
+    r2 = _ranks(spark, rows, k=6)
     assert r1 == pytest.approx(r2, abs=1e-12)
 
 
@@ -299,14 +298,15 @@ def test_lpa_duplicate_and_reversed_edges_collapse(spark):
     assert _lpa(spark, rows, rounds=2) == {"a": "a", "b": "a"}
 
 # ---------------------------------------------------------------------------
-# The two iteration shapes (r11): below broadcast_state_max nodes the
-# per-round state table is BROADCAST into the canonical edge frame; above it
-# the edge list is persist()ed hash-partitioned on the per-round join key and
-# the state enters via shuffle_hash. Both paths must compute the identical
-# result, and the big path's round joins must actually BE shuffled-hash
-# against the preserved layout — localCheckpoint used to erase the
-# partitioning, so the claimed layout reuse was silently a full edge
-# exchange + sort every round (the r11 graph_hits_trade profile).
+# The two iteration shapes: under the derived broadcast limit the per-round
+# state table is BROADCAST into the edge frame; above it the edge list is
+# persist()ed hash-partitioned on the per-round join key and the state
+# enters via shuffle_hash. The limit is derived from the session's
+# autoBroadcastJoinThreshold, so the broadcast_disabled fixture forces the
+# partitioned path. Both paths must compute the identical result, and the
+# partitioned path's round joins must actually BE shuffled-hash against the
+# preserved layout — a localCheckpoint'ed edge frame would lose its
+# partitioning and silently re-exchange and re-sort the edges every round.
 
 
 _PATH_ROWS = [
@@ -315,161 +315,187 @@ _PATH_ROWS = [
 ]
 
 
-def test_pagerank_partitioned_state_path_matches_broadcast_path(spark):
+def test_pagerank_partitioned_state_path_matches_broadcast_path(
+    spark, broadcast_disabled
+):
     rows = [(s, d, 1.0 + i % 3) for i, (s, d) in enumerate(_PATH_ROWS)]
     small = _ranks(spark, rows, k=4)
-    big = _ranks(spark, rows, k=4, broadcast_state_max=0)
+    with broadcast_disabled():
+        big = _ranks(spark, rows, k=4)
     assert big == pytest.approx(small, abs=1e-12)
 
 
-def test_hits_partitioned_state_path_matches_broadcast_path(spark):
+def test_hits_partitioned_state_path_matches_broadcast_path(
+    spark, broadcast_disabled
+):
     edges = spark.createDataFrame(_PATH_ROWS, "src string, dst string")
     small = {r.node: (r.hub, r.authority) for r in hits(edges, k=3).collect()}
-    big = {
-        r.node: (r.hub, r.authority)
-        for r in hits(edges, k=3, broadcast_state_max=0).collect()
-    }
+    with broadcast_disabled():
+        big = {r.node: (r.hub, r.authority) for r in hits(edges, k=3).collect()}
     for n in small:
         assert big[n] == pytest.approx(small[n], abs=1e-12)
 
 
-def test_lpa_partitioned_state_path_matches_broadcast_path(spark):
+def test_lpa_partitioned_state_path_matches_broadcast_path(
+    spark, broadcast_disabled
+):
     from demo_otel_parquet_antalya_spark.operators.graph import label_propagation
 
     edges = spark.createDataFrame(_PATH_ROWS, "src string, dst string")
     small = {r.node: r.community for r in label_propagation(edges).collect()}
-    big = {
-        r.node: r.community
-        for r in label_propagation(edges, broadcast_state_max=0).collect()
-    }
+    with broadcast_disabled():
+        big = {r.node: r.community for r in label_propagation(edges).collect()}
     assert big == small
 
 
-def test_round_join_shapes(spark):
-    """Small path: the state join is BroadcastHashJoin against the canonical
-    edge frame. Big path: ShuffledHashJoin probing the persist()ed layout
+def test_round_join_shapes(spark, broadcast_disabled):
+    """Broadcast path: the state join is BroadcastHashJoin. Partitioned
+    path: ShuffledHashJoin probing the persist()ed layout
     (InMemoryTableScan) — the partitioning-preserving shape, not a
-    re-exchanged SortMergeJoin. Asserted on one half-step built from the
-    shared helpers (the operators' returned plans are cut off the round
-    joins by the final state checkpoints)."""
+    re-exchanged SortMergeJoin. Asserted on one half-step run through the
+    iteration driver, whose plan the step records before the driver cuts
+    it (the operators' returned plans are cut off the round joins by the
+    final state checkpoints)."""
     import pyspark.sql.functions as F
 
-    from demo_otel_parquet_antalya_spark.operators.graph import (
-        _iter_layout,
-        _state_side,
-    )
+    from demo_otel_parquet_antalya_spark.operators.graph import _iterate
 
     e = (
         spark.createDataFrame(_PATH_ROWS, "src string, dst string")
         .distinct()
         .localCheckpoint(eager=True)
     )
-    state = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(1.0).alias("s")
-    )
+    nodes = e.select(F.col("src").alias("node")).distinct()
+    state = nodes.select("node", F.lit(1.0).alias("s"))
+    plans = []
 
-    def half_step(layout, small):
-        return (
-            layout.join(_state_side(state, small), layout.src == state.node)
+    def half_step(state, loop, i):
+        layout = loop.edges[0]
+        out = (
+            layout.join(loop.side(state), layout.src == state.node)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("s").alias("s"))
         )
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
 
-    # label_propagation's broadcast-path shape (r15): the layout is keyed
-    # by the half-step's AGGREGATE key (dst here), the state broadcasts,
-    # and the keyed sum needs NO exchange at all — the whole round is
-    # InMemoryTableScan -> BHJ -> agg (pagerank/HITS keep the canonical
-    # frame on this path: their per-round exchange is node-sized partials
-    # and the layout A/B'd as a loss for them)
-    small_layout = _iter_layout(e, "dst")
-    try:
-        small_plan = (
-            half_step(small_layout, True)
-            ._jdf.queryExecution().executedPlan().toString()
+    def one_round():
+        # label_propagation's layout choice: keyed by the half-step's
+        # AGGREGATE key (dst) when the state broadcasts, by its join key
+        # (src) when it is partitioned
+        _iterate(
+            nodes, "node", state, 1, half_step, edges=e, by=("src",), small_by=("dst",)
         )
-        assert "BroadcastHashJoin" in small_plan
-        assert "SortMergeJoin" not in small_plan
-        assert "InMemoryTableScan" in small_plan
-        # nothing between the keyed aggregate (plan top) and the layout
-        # scan may exchange: the whole round is agg -> BHJ -> cached scan
-        # (Exchanges deeper down — inside the InMemoryRelation's stored
-        # build plan or under the state-side BroadcastExchange — are the
-        # one-time layout/broadcast costs, not per-round shuffles)
-        s_lines = small_plan.splitlines()
-        s_scan_at = next(
-            i for i, l in enumerate(s_lines) if "InMemoryTableScan" in l
-        )
-        spine = s_lines[:s_scan_at]
-        assert not any(
-            "Exchange hashpartitioning" in l for l in spine
-        ), spine
-    finally:
-        small_layout.unpersist()
+        return plans.pop()
 
-    layout = _iter_layout(e, "src")
-    try:
-        big_plan = (
-            half_step(layout, False)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "ShuffledHashJoin" in big_plan
-        assert "InMemoryTableScan" in big_plan
-        assert "SortMergeJoin" not in big_plan
-        # the central invariant: the persisted edge side streams into the
-        # join with NO re-exchange or sort — nothing but row-level ops may
-        # sit between the join and its InMemoryTableScan (an Exchange here
-        # would silently reintroduce the full per-round edge shuffle this
-        # shape exists to eliminate, e.g. via a future
-        # canChangeCachedPlanOutputPartitioning or AQE coalescing change)
-        lines = big_plan.splitlines()
-        join_at = next(i for i, l in enumerate(lines) if "ShuffledHashJoin" in l)
-        scan_at = next(
-            i for i, l in enumerate(lines[join_at:], join_at)
-            if "InMemoryTableScan" in l
-        )
-        between = lines[join_at + 1 : scan_at]
-        assert not any("Exchange" in l or "Sort" in l for l in between), between
-    finally:
-        layout.unpersist()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cache.clearCache()
+
+    # broadcast path: the state broadcasts and the keyed sum needs NO
+    # exchange at all — the whole round is InMemoryTableScan -> BHJ -> agg
+    # (pagerank/HITS ask for no layout on this path: their per-round
+    # exchange is node-sized partials, where the layout is a loss)
+    small_plan = one_round()
+    assert cache.isEmpty()
+    assert "BroadcastHashJoin" in small_plan
+    assert "SortMergeJoin" not in small_plan
+    assert "InMemoryTableScan" in small_plan
+    # nothing between the keyed aggregate (plan top) and the layout scan
+    # may exchange: the whole round is agg -> BHJ -> cached scan
+    # (Exchanges deeper down — inside the InMemoryRelation's stored build
+    # plan or under the state-side BroadcastExchange — are the one-time
+    # layout/broadcast costs, not per-round shuffles)
+    s_lines = small_plan.splitlines()
+    s_scan_at = next(i for i, l in enumerate(s_lines) if "InMemoryTableScan" in l)
+    spine = s_lines[:s_scan_at]
+    assert not any("Exchange hashpartitioning" in l for l in spine), spine
+
+    with broadcast_disabled():
+        big_plan = one_round()
+    assert cache.isEmpty()
+    assert "ShuffledHashJoin" in big_plan
+    assert "InMemoryTableScan" in big_plan
+    assert "SortMergeJoin" not in big_plan
+    # the central invariant: the persisted edge side streams into the join
+    # with NO re-exchange or sort — nothing but row-level ops may sit
+    # between the join and its InMemoryTableScan (an Exchange here would
+    # silently reintroduce the full per-round edge shuffle this shape
+    # exists to eliminate, e.g. via a future
+    # canChangeCachedPlanOutputPartitioning or AQE coalescing change)
+    lines = big_plan.splitlines()
+    join_at = next(i for i, l in enumerate(lines) if "ShuffledHashJoin" in l)
+    scan_at = next(
+        i for i, l in enumerate(lines[join_at:], join_at) if "InMemoryTableScan" in l
+    )
+    between = lines[join_at + 1 : scan_at]
+    assert not any("Exchange" in l or "Sort" in l for l in between), between
 
 
-def test_big_path_releases_the_persisted_layouts(spark):
+def test_big_path_releases_the_persisted_layouts(spark, broadcast_disabled):
     """The big path must not leak CacheManager entries: after the returned
     frame is materialized, no layout persisted by the call remains cached
     (persist()ed frames are NOT freed by GC, unlike checkpointed RDDs)."""
-    from demo_otel_parquet_antalya_spark.operators.graph import label_propagation
+    from demo_otel_parquet_antalya_spark.operators.dedup import connected_components
+    from demo_otel_parquet_antalya_spark.operators.graph import (
+        k_core,
+        label_propagation,
+    )
 
     # the CacheManager tracks df.persist() entries (localCheckpoint RDDs
     # live in getPersistentRDDs instead and ARE ContextCleaner-freed)
     cache = spark._jsparkSession.sharedState().cacheManager()
     cache.clearCache()
     edges = spark.createDataFrame(_PATH_ROWS, "src string, dst string")
-    hits(edges, k=2, broadcast_state_max=0).collect()
-    _ranks(
-        spark,
-        [(s, d, 1.0) for s, d in _PATH_ROWS],
-        k=2,
-        broadcast_state_max=0,
-    )
-    label_propagation(edges, rounds=2, broadcast_state_max=0).collect()
-    from demo_otel_parquet_antalya_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(s, d) for s, d in _PATH_ROWS], "id_a string, id_b string"
-    )
-    connected_components(pairs, broadcast_state_max=0).collect()
+    pairs = spark.createDataFrame(_PATH_ROWS, "id_a string, id_b string")
+    with broadcast_disabled():
+        hits(edges, k=2).collect()
+        _ranks(spark, [(s, d, 1.0) for s, d in _PATH_ROWS], k=2)
+        label_propagation(edges, rounds=2).collect()
+        connected_components(pairs).collect()
+        k_core(edges, k=2, rounds=2).collect()
+    assert cache.isEmpty()
+    # label_propagation persists a layout on the broadcast path too
+    label_propagation(edges, rounds=2).collect()
     assert cache.isEmpty()
 
 
-def test_kcore_partitioned_state_path_matches_broadcast_path(spark):
+def test_driver_releases_layouts_when_a_round_fails(spark, broadcast_disabled):
+    """A step that raises mid-loop must not leave its layouts cached: the
+    driver owns their release on every exit, not just on success."""
+    import pyspark.sql.functions as F
+
+    from demo_otel_parquet_antalya_spark.operators.graph import _iterate
+
+    e = spark.createDataFrame(_PATH_ROWS, "src string, dst string")
+    nodes = e.select(F.col("src").alias("node")).distinct()
+
+    def boom(state, loop, i):
+        assert len(loop.edges) == 2 and not loop.small
+        raise RuntimeError("round failed")
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cache.clearCache()
+    with broadcast_disabled(), pytest.raises(RuntimeError, match="round failed"):
+        _iterate(nodes, "node", nodes, 3, boom, edges=e, by=("src", "dst"))
+    assert cache.isEmpty()
+    # a layout whose own materialization fails is released too
+    bad = e.withColumn(
+        "x", F.when(F.col("src") == "E", F.raise_error(F.lit("layout failed")))
+    )
+    with broadcast_disabled(), pytest.raises(Exception, match="layout failed"):
+        _iterate(nodes, "node", nodes, 3, boom, edges=bad, by=("src", "dst"))
+    assert cache.isEmpty()
+
+
+def test_kcore_partitioned_state_path_matches_broadcast_path(
+    spark, broadcast_disabled
+):
     from demo_otel_parquet_antalya_spark.operators.graph import k_core
 
     edges = spark.createDataFrame(_PATH_ROWS, "src string, dst string")
     small = {r.node: r.degree for r in k_core(edges, k=2, rounds=4).collect()}
-    big = {
-        r.node: r.degree
-        for r in k_core(edges, k=2, rounds=4, broadcast_state_max=0).collect()
-    }
+    with broadcast_disabled():
+        big = {r.node: r.degree for r in k_core(edges, k=2, rounds=4).collect()}
     assert big == small
 
 
@@ -501,15 +527,12 @@ def test_derived_broadcast_state_max_brackets_the_measured_crossover(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
-    # _pick_small: one fused job, fixed-width vs variable-width key stats,
-    # explicit override wins over the derivation
+    # _pick_small: one fused job, fixed-width vs variable-width key stats
     longs = spark.range(10).select(F.col("id").alias("node"))
-    n, small = _pick_small(longs, "node", None)
+    n, small = _pick_small(longs, "node")
     assert (n, small) == (10, True)
-    n, small = _pick_small(longs, "node", 0)
-    assert (n, small) == (10, False)
     strs = longs.select(F.col("node").cast("string").alias("node"))
-    n, small = _pick_small(strs, "node", None)
+    n, small = _pick_small(strs, "node")
     assert (n, small) == (10, True)
 
 

@@ -180,7 +180,7 @@ def test_multimodal_frame_sampling_fanout(spark, docs):
     assert refeat.count() == len(feat_in)
 
 
-def test_connected_components_chain_and_triangle(spark):
+def test_connected_components_chain_and_triangle(spark, broadcast_disabled):
     """A 4-node chain (worst-case diameter) and a triangle must each collapse
     to one cluster labeled by the min id; disjoint pairs stay separate."""
     pairs = spark.createDataFrame(
@@ -192,13 +192,13 @@ def test_connected_components_chain_and_triangle(spark):
             (10, 10), (11, 10), (12, 10),
             (20, 20), (21, 20)}
     assert got == want
-    # the partitioned-state path (label table past broadcast_state_max,
-    # r11: persist()ed edge layout + shuffle_hash state joins) must compute
-    # the identical clustering
-    big = {
-        (r.id, r.cluster_id)
-        for r in dedup.connected_components(pairs, broadcast_state_max=0).collect()
-    }
+    # the partitioned-state path (label table past the derived broadcast
+    # limit: persist()ed edge layout + shuffle_hash state joins) must
+    # compute the identical clustering
+    with broadcast_disabled():
+        big = {
+            (r.id, r.cluster_id) for r in dedup.connected_components(pairs).collect()
+        }
     assert big == want
 
 

@@ -7,6 +7,7 @@ components."""
 from __future__ import annotations
 
 import json
+import sys
 
 from pyspark.sql import functions as F
 
@@ -99,3 +100,32 @@ def test_untouched_components_carry_forward_without_relabel(spark):
     # the relabeled arm saw only the touched component + the new node
     touched = out.filter(F.col("cluster_id") == 1)
     assert touched.count() == 3
+
+
+def test_chained_merges_keep_the_plan_linear(spark):
+    """Each merge's output is the next merge's prior, and a step reads prior
+    in three arms (touched, affected, untouched). Unless a step reads prior
+    once, the chain's plan grows geometrically (3^k copies of the first
+    prior after k merges); the leaf-relation count of the analyzed plan
+    must grow at most linearly with the chain length. So must the digit
+    count of the plan's size estimate: a checkpoint inherits the estimate
+    of the plan it cuts, and the CC rounds inside each merge multiply it."""
+    leaves, digits = {}, {}
+    prior = spark.createDataFrame([], "id long, cluster_id long")
+    # a runaway estimate has more digits than Python converts by default
+    limit = sys.get_int_max_str_digits()
+    sys.set_int_max_str_digits(0)
+    try:
+        for k in range(1, 9):
+            prior = merge_components(
+                prior, spark.createDataFrame([(2 * k, 2 * k + 1)], SCHEMA)
+            )
+            if k in (2, 4, 8):
+                qe = prior._jdf.queryExecution()
+                leaves[k] = qe.analyzed().collectLeaves().size()
+                digits[k] = len(str(qe.optimizedPlan().stats().sizeInBytes()))
+    finally:
+        sys.set_int_max_str_digits(limit)
+    assert prior.count() == 16
+    for grows in (leaves, digits):
+        assert grows[4] <= 2 * grows[2] and grows[8] <= 2 * grows[4], grows
