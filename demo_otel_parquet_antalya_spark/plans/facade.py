@@ -15,6 +15,9 @@ import datetime as _dt
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from demo_otel_parquet_antalya_spark.schema import WAREHOUSE_SCHEMA
+from demo_otel_parquet_antalya_spark.sources.parquet_sink import read_logs
+
 # the compat-vs-config split for the rollup panel routes: raises of this
 # type mean "this exact request belongs on the raw scan" (serving's auto
 # routing falls back on exactly it); plain ValueError stays a hard 400
@@ -232,26 +235,24 @@ def null_hour_dirs(spark, logs_dir: str) -> list:
 def q2_recent_logs_pruned(
     spark, logs_dir: str, limit: int = 10, filters=()
 ) -> DataFrame:
-    """Q2 with TAIL PRUNING: 'newest N logs' must never scan history — the
-    plain Q2 is a TakeOrderedAndProject over the WHOLE warehouse,
-    O(history) per dashboard refresh, and even a partition-FILTERED read
-    of the root path re-LISTS every file in the warehouse first. This
-    variant lists the partition directories (no data read), then reads
-    ONLY the newest K hour directories by path (``basePath`` keeps the
-    partition columns), widening K (1 -> 4x -> ...) only if those hours
-    hold fewer than ``limit`` rows — so the steady-state refresh lists
-    and reads one hour directory regardless of warehouse size. Ad-hoc
-    ``filters`` apply BEFORE the widening count, so filtered results stay
-    complete. NULL-timestamp rows sort LAST in the descending order, so
-    their (Hive default) partition directories join the probe only when
-    the timestamped hours run out. Results are value-identical to
-    ``q2_recent_logs`` (pytest + HTTP equality)."""
+    """Q2 over the newest hour directories only. The plain Q2 is a
+    TakeOrderedAndProject over the whole warehouse, O(history) per
+    dashboard refresh, and even a partition-filtered read of the root
+    lists every file first. This variant lists the hour directories (no
+    data read) and reads the newest ones by path through ``_widened_take``,
+    so a steady-state refresh reads one hour regardless of warehouse size.
+    Ad-hoc ``filters`` apply before the widening count, so filtered
+    results stay complete. NULL-timestamp rows sort last in the descending
+    order, so their (Hive default) partition directories join only the
+    final probe, once the timestamped hours run out. Value-identical to
+    ``q2_recent_logs``, which a directory with no Hive layout falls back
+    to over a full read."""
     entries = _hour_dir_entries(spark, logs_dir)
     hours = sorted(_group_hours(entries).items(), reverse=True)  # newest first
     nulls = [p for p, t in entries if t is None]
     if not hours and not nulls:
         return q2_recent_logs(
-            adhoc_filter(spark.read.parquet(logs_dir), filters), limit
+            adhoc_filter(read_logs(spark, logs_dir), filters), limit
         )
     return _widened_take(
         spark, logs_dir, hours, limit,
@@ -273,35 +274,45 @@ def _widened_take(
     lead_paths=(), tail_paths=(),
 ) -> DataFrame:
     """Shared widening probe for the tail-pruned panels (q2 newest-N, q6
-    oldest-N): read the first K hour directories of ``hours`` (``basePath``
-    keeps the partition columns), build the panel frame over them, take
-    its rows — ONE job per widening step; the rows are both the widening
-    decision and the result (a top-N panel is tiny by construction, so
-    returning a local frame is free) — and widen K (1 -> 4x) while the
-    hours hold fewer than ``limit`` rows. Correct because hour directories
-    partition event time: every row outside the first K hours sorts
-    strictly beyond them in the panel's direction, so once K hours hold
-    ``limit`` rows the local top-N IS the global one.
+    oldest-N): read the first K hour directories of ``hours`` (``read_logs``
+    declares the warehouse schema and keeps the partition columns), build
+    the panel frame over them, take its rows, and widen K (1 -> 4x)
+    while the hours hold fewer than ``limit`` rows. Correct because hour
+    directories partition event time: every row outside the first K hours
+    sorts strictly beyond them in the panel's direction, so once K hours
+    hold ``limit`` rows the local top-N is the global one.
+
+    Each probe is one Spark job, and the answer costs none beyond it. The
+    rows stay in the JVM (``takeAsList``) and come back as a frame over a
+    local relation, which Spark collects without scheduling anything. Rows
+    taken to Python and rebuilt there would make a frame over a Python RDD,
+    which the caller's ``limit().collect()`` scans again in several
+    growing jobs.
 
     NULL-timestamp directories break that time ordering, so the caller
-    places them by the panel's null ordering: ``lead_paths`` join EVERY
-    probe (q6 ascends, NULLS FIRST — null rows legitimately belong to any
-    top-N), ``tail_paths`` join only the exhausted final probe (q2
-    descends, NULLS LAST — null rows enter only when the timestamped rows
-    run out; probing them earlier could return null rows ahead of unread
-    older timestamped ones)."""
+    places them by the panel's null ordering: ``lead_paths`` join every
+    probe (q6 ascends, NULLS FIRST, so null rows belong to any top-N);
+    ``tail_paths`` join only the exhausted final probe (q2 descends, NULLS
+    LAST, so null rows enter only when the timestamped rows run out;
+    probing them earlier could return null rows ahead of unread older
+    timestamped ones)."""
     k = 1
     while True:
         exhausted = k >= len(hours)
         paths = [*lead_paths, *(p for _t, dirs in hours[:k] for p in dirs)]
         if exhausted and tail_paths:
             paths += list(tail_paths)
-        sub = spark.read.option("basePath", logs_dir).parquet(*paths)
-        cand = build(sub)
-        rows = cand.take(limit)
-        if exhausted or len(rows) >= limit:
-            return spark.createDataFrame(rows, cand.schema)
+        cand = build(read_logs(spark, logs_dir, *paths))._jdf
+        rows = cand.takeAsList(limit)
+        if exhausted or rows.size() >= limit:
+            return _local_frame(spark, rows, cand.schema())
         k *= 4
+
+
+def _local_frame(spark, jrows, jschema) -> DataFrame:
+    """A frame over rows held in the JVM: a local relation, which Spark
+    answers without running a job."""
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
 
 
 def q3_severity_counts(logs: DataFrame) -> DataFrame:
@@ -371,24 +382,19 @@ def _session_naive(spark, v):
 def q6_log_panel_pruned(
     spark, logs_dir: str, start=None, end=None, limit: int = 1000, filters=()
 ) -> DataFrame:
-    """Q6 with TAIL PRUNING from the OLDEST end (r10): the log panel is
-    'oldest N in the window' (logs.json:181 orders ascending, LIMIT 1000),
-    so its windowless form is a TakeOrderedAndProject over the WHOLE
-    warehouse — O(history) per refresh, 4× at 100× data by SCALE.md's
-    measurement. Mirror of ``q2_recent_logs_pruned`` with the direction
-    reversed: list the partition hour directories (no data read), keep
-    only hours inside the requested window (when one is given), read the
-    OLDEST K of them (``basePath`` keeps the partition columns), widening
-    K (1 -> 4x -> ...) while they hold fewer than ``limit`` rows — rows
-    in later hours are strictly newer, so the oldest-``limit`` within the
-    first K hours IS the global answer once K hours hold ``limit`` rows.
-    Ad-hoc ``filters`` and the exact ``time_filter`` bounds apply BEFORE
-    the widening count, so filtered/windowed results stay complete.
-    NULL-timestamp rows sort FIRST in the ascending windowless form, so
+    """Q6 over the oldest hour directories in the window only. The log
+    panel is 'oldest N in the window' (logs.json:181 orders ascending,
+    LIMIT 1000), so its windowless form is a TakeOrderedAndProject over
+    the whole warehouse, O(history) per refresh. This mirrors
+    ``q2_recent_logs_pruned`` with the direction reversed: list the hour
+    directories (no data read), keep the hours inside the requested
+    window, and read the oldest ones through ``_widened_take``. Ad-hoc
+    ``filters`` and the exact ``time_filter`` bounds apply before the
+    widening count, so filtered and windowed results stay complete.
+    NULL-timestamp rows sort first in the ascending windowless form, so
     their (Hive default) partition directories join every probe; a window
     excludes them on both routes (``time_filter``'s closed-range
-    predicates drop NULLs). Value-identical to ``q6_log_panel`` (pytest +
-    HTTP equality)."""
+    predicates drop NULLs). Value-identical to ``q6_log_panel``."""
     start, end = _session_naive(spark, start), _session_naive(spark, end)
     entries = _hour_dir_entries(spark, logs_dir)
     all_hours = sorted(_group_hours(entries).items())  # oldest first
@@ -404,13 +410,17 @@ def q6_log_panel_pruned(
     if not all_hours and not nulls:
         # no Hive layout at all: only the full read can answer
         return q6_log_panel(
-            adhoc_filter(spark.read.parquet(logs_dir), filters), start, end, limit
+            adhoc_filter(read_logs(spark, logs_dir), filters), start, end, limit
         )
     if not hours and not nulls:
-        # the window excludes EVERY partition hour: the listing already
-        # proves the answer empty — probe ONE directory for the schema
-        # instead of falling back to an O(history) full-warehouse read
-        hours = all_hours[:1]
+        # the window excludes every partition hour, so the listing alone
+        # proves the answer empty; the panel over an empty local relation
+        # still resolves the columns and the ad-hoc filters
+        empty = _local_frame(
+            spark, spark._jvm.java.util.ArrayList(),
+            spark._jsparkSession.parseDataType(WAREHOUSE_SCHEMA.json()),
+        )
+        return q6_log_panel(adhoc_filter(empty, filters), start, end, limit)
     return _widened_take(
         spark, logs_dir, hours, limit,
         lambda sub: q6_log_panel(adhoc_filter(sub, filters), start, end, limit),

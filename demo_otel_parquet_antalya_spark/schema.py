@@ -41,6 +41,20 @@ OTEL_LOGS_SCHEMA = T.StructType(
 # logs/{service}/year=/month=/day=/hour=/ — README.md:171, SURVEY.md §2.A7)
 PARTITION_COLUMNS = ["service_name", "year", "month", "day", "hour"]
 
+# What a read of the partitioned warehouse resolves to: the data columns in
+# file order, then the partition columns as partition discovery types them
+# (year/month/day/hour as int). Declaring it spares every read the job that
+# schema inference runs to sample a file footer. Every field is nullable:
+# NULL-timestamp rows land in the Hive default partition with NULL
+# year/month/day/hour, and a read must not promise more than the files do.
+WAREHOUSE_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True)
+     for f in OTEL_LOGS_SCHEMA.fields if f.name not in PARTITION_COLUMNS]
+    + [T.StructField(c, OTEL_LOGS_SCHEMA[c].dataType if c in OTEL_LOGS_SCHEMA.names
+                     else T.IntegerType(), True)
+       for c in PARTITION_COLUMNS]
+)
+
 # Resource attributes promoted to top-level columns (README.md:97-99)
 PROMOTED_RESOURCE_ATTRS = {
     "service.name": "service_name",

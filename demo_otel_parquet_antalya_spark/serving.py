@@ -116,6 +116,7 @@ from pyspark.sql import SparkSession
 from demo_otel_parquet_antalya_spark.http_door import read_bounded_body
 from demo_otel_parquet_antalya_spark.plans.tables import load_table
 from demo_otel_parquet_antalya_spark.schema import TESTDATA_TABLES
+from demo_otel_parquet_antalya_spark.sources.parquet_sink import read_logs
 from demo_otel_parquet_antalya_spark.streaming.rollup import (
     RollupRouteIncompatible,
 )
@@ -1024,25 +1025,21 @@ class _SQLHandler(BaseHTTPRequestHandler):
                     return _df_payload(frame, self.row_cap, source="rollup")
 
                 def pruned_route():
-                    # tail pruning: 'newest N' (q2) / 'oldest N in the
-                    # window' (q6) lists and reads the boundary hour
-                    # directories ONLY (widening if they hold fewer than
-                    # N rows), never the whole history — ad-hoc filters
-                    # apply before the widening count so filtered
-                    # results stay complete
+                    # 'newest N' (q2) and 'oldest N in the window' (q6)
+                    # read only the hour directories at the panel's end
+                    # of time, so their cost follows the window, not the
+                    # history; the facade widens while those hours hold
+                    # fewer than N rows
                     if name not in _PRUNED_PANELS:
                         raise ValueError(f"panel {name!r} has no pruned route")
                     from demo_otel_parquet_antalya_spark.plans import facade
 
+                    # both limits are clamped to cap + 1: each probe
+                    # holds `limit` rows on the driver, so a client limit
+                    # must stay bounded by the row cap, and the payload's
+                    # truncated flag needs cap + 1 rows to read true
+                    # where the raw route's does
                     if name == "q2_recent_logs":
-                        # clamp BEFORE the pruned path: its widening probe
-                        # take()s `limit` rows to the driver, so a client
-                        # limit must never exceed the endpoint's row cap —
-                        # but clamp to cap + 1, not cap: the payload's
-                        # truncated flag probes cap + 1 rows, and a clamp
-                        # to cap would report truncated=false where the
-                        # raw route says true (code-review r11; the probe
-                        # stays bounded)
                         frame = facade.q2_recent_logs_pruned(
                             self.spark, self.logs_dir,
                             limit=min(_int_param(params, "limit", 10, "rows"), self.row_cap + 1),
@@ -1108,7 +1105,7 @@ class _SQLHandler(BaseHTTPRequestHandler):
                             # (VERDICT r12 'worth keeping visible'), so
                             # the payload says so instead of hiding it
                             fallback_reason = str(exc)
-                    logs = self.spark.read.parquet(self.logs_dir)
+                    logs = read_logs(self.spark, self.logs_dir)
                     frame = _panel_frame(logs, name, params, filters)
                     payload = _df_payload(frame, self.row_cap, source="raw")
                     if fallback_reason is not None:

@@ -15,10 +15,13 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from demo_otel_parquet_antalya_spark.schema import PARTITION_COLUMNS
+from demo_otel_parquet_antalya_spark.fsutil import hadoop_glob, local_root
+from demo_otel_parquet_antalya_spark.schema import PARTITION_COLUMNS, WAREHOUSE_SCHEMA
 
 
 def with_partition_columns(logs: DataFrame) -> DataFrame:
@@ -42,10 +45,34 @@ def write_logs(logs: DataFrame, root: str, mode: str = "append") -> None:
     )
 
 
-def read_logs(spark: SparkSession, root: str) -> DataFrame:
-    """Scan the partitioned warehouse; partition columns come back typed
-    (basePath keeps them even for single-partition reads)."""
-    return spark.read.option("basePath", root).parquet(root)
+def read_logs(spark: SparkSession, root: str, *paths: str) -> DataFrame:
+    """Scan the partitioned warehouse at ``root``, or only its directories
+    ``paths``; partition columns come back typed (basePath keeps them even
+    for single-partition reads).
+
+    Over this package's layout the read declares ``WAREHOUSE_SCHEMA``,
+    which spares it the Spark job that schema inference runs to sample a
+    file footer. A root without that layout is a directory this package
+    did not partition, so its columns are not known and the read infers
+    them: declaring year/month/day/hour there would read them as NULL, and
+    ``time_filter``'s partition predicates would then drop every row."""
+    reader = spark.read.option("basePath", root)
+    if paths or _has_layout(spark, root):
+        reader = reader.schema(WAREHOUSE_SCHEMA)
+    return reader.parquet(*(paths or (root,)))
+
+
+def _has_layout(spark: SparkSession, root: str) -> bool:
+    """Whether ``root``'s top level holds ``service_name=`` partition
+    directories: one directory listing, no data read."""
+    lead = f"{PARTITION_COLUMNS[0]}="
+    local = local_root(root)
+    if local is None:
+        return bool(hadoop_glob(spark, root.rstrip("/") + f"/{lead}*"))
+    try:
+        return any(e.is_dir() and e.name.startswith(lead) for e in os.scandir(local))
+    except OSError:
+        return False
 
 
 def backfill_logs(logs: DataFrame, root: str) -> None:

@@ -1298,6 +1298,231 @@ def test_pruned_routes_include_null_timestamp_partitions(spark, tmp_path):
     ]
 
 
+def _two_hour_warehouse(spark, tmp_path) -> str:
+    """60 rows in each of two hours two hours apart, in one ingest."""
+    import shutil
+
+    from demo_otel_parquet_antalya_spark.sources.generator import generate_files
+    from demo_otel_parquet_antalya_spark.streaming.ingest import run_ingest_once
+
+    landing, wh = str(tmp_path / "l"), str(tmp_path / "wh")
+    generate_files(landing, n_files=2, records_per_file=30)
+    generate_files(
+        str(tmp_path / "l2"), n_files=2, records_per_file=30,
+        base_ns=1_700_000_000_000_000_000 + 2 * 3600 * 1_000_000_000,
+    )
+    for f in (tmp_path / "l2").iterdir():
+        shutil.move(str(f), landing + "/x_" + f.name)
+    run_ingest_once(spark, landing, wh, str(tmp_path / "c"))
+    return wh
+
+
+def _jobs_run(spark, fn):
+    """``(fn(), the number of Spark jobs it ran)``, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker reads a store the listener bus feeds
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _newest_job_id(spark) -> int:
+    """The id of the newest Spark job. Ids count up in submission order,
+    so two readings bracket the jobs run between them; the status store
+    lists jobs newest first."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore().jobsList(None).head().jobId()
+
+
+def test_pruned_panels_run_one_job_per_probe(spark, tmp_path):
+    """A pruned panel answer, payload included, costs one Spark job per
+    widening probe and nothing more: the probe's rows stay in the JVM as
+    a local relation, and the read declares the warehouse schema instead
+    of inferring it. (Before, one q6 request ran five jobs: inference,
+    the take, and three growing scans of the rows rebuilt from Python.)"""
+    import datetime
+
+    from demo_otel_parquet_antalya_spark.plans import facade
+    from demo_otel_parquet_antalya_spark.serving import _df_payload
+
+    wh = _two_hour_warehouse(spark, tmp_path)
+    assert len(facade.list_partition_hours(spark, wh)) == 2
+    logs = spark.read.parquet(wh)
+    cases = {
+        # the first probe holds `limit` rows: one job
+        (10, "q6"): (1, lambda n: facade.q6_log_panel_pruned(spark, wh, limit=n),
+                     lambda n: facade.q6_log_panel(logs, limit=n)),
+        (10, "q2"): (1, lambda n: facade.q2_recent_logs_pruned(spark, wh, n),
+                     lambda n: facade.q2_recent_logs(logs, n)),
+        # the boundary hour holds 60 of 90 rows: a second, widened probe
+        (90, "q6"): (2, lambda n: facade.q6_log_panel_pruned(spark, wh, limit=n),
+                     lambda n: facade.q6_log_panel(logs, limit=n)),
+        (90, "q2"): (2, lambda n: facade.q2_recent_logs_pruned(spark, wh, n),
+                     lambda n: facade.q2_recent_logs(logs, n)),
+    }
+    for (limit, panel), (want_jobs, pruned, raw) in cases.items():
+        got, jobs = _jobs_run(spark, lambda: _df_payload(pruned(limit), 5000))
+        want = _df_payload(raw(limit), 5000)
+        assert jobs == want_jobs, (panel, limit, jobs)
+        assert got["columns"] == want["columns"]
+        assert got["row_count"] == want["row_count"] == limit
+        assert sorted(map(tuple, got["rows"])) == sorted(map(tuple, want["rows"]))
+    # a window before every partition hour: the listing proves it empty,
+    # so no job runs
+    old = datetime.datetime(2020, 1, 1)
+    empty, jobs = _jobs_run(
+        spark,
+        lambda: _df_payload(
+            facade.q6_log_panel_pruned(
+                spark, wh, old, old + datetime.timedelta(hours=1), limit=10
+            ),
+            5000,
+        ),
+    )
+    assert jobs == 0 and empty["row_count"] == 0
+    assert empty["columns"] == [
+        "log_time", "message", "service_name", "scope_name", "severity_text",
+    ]
+
+
+def test_raw_panel_route_skips_schema_inference(spark, tmp_path):
+    """The raw panel route reads the warehouse under its declared schema:
+    a windowed q5 runs its own two jobs and no inference job (three
+    before). An ad-hoc filter on an unknown column still answers 400,
+    on the raw and the pruned route alike."""
+    import datetime
+    from urllib.parse import urlencode
+
+    wh = _two_hour_warehouse(spark, tmp_path)
+    logs = spark.read.parquet(wh)
+    lo = logs.selectExpr("min(timestamp)").first()[0]
+    hi = lo + datetime.timedelta(minutes=30)
+    window_rows = logs.filter(
+        (logs.timestamp >= lo) & (logs.timestamp <= hi)
+    ).count()
+    server = start_sql_endpoint(spark, SF_DIR, row_cap=5000, logs_dir=wh)
+    host, port = server.server_address
+    base = f"http://{host}:{port}"
+    window = urlencode({
+        "interval": 30, "start": lo.isoformat(sep=" "),
+        "end": hi.isoformat(sep=" "),
+    })
+    try:
+        before = _newest_job_id(spark)
+        with urllib.request.urlopen(
+            f"{base}/panels/q5_timeseries?{window}&source=raw"
+        ) as r:
+            got = json.loads(r.read())
+        assert _newest_job_id(spark) - before == 2
+        assert got["source"] == "raw"
+        assert sum(r_[2] for r_ in got["rows"]) == window_rows > 0
+        for bad in (
+            f"/panels/q5_timeseries?{window}&source=raw&filter=no_such_col=x",
+            "/panels/q6_log_panel?limit=5&source=pruned&filter=no_such_col=x",
+        ):
+            try:
+                urllib.request.urlopen(base + bad)
+            except urllib.error.HTTPError as e:
+                assert e.code == 400
+                assert "no_such_col" in json.loads(e.read())["error"]
+            else:
+                raise AssertionError(f"expected 400 from {bad}")
+    finally:
+        server.shutdown()
+
+
+def _null_timestamp_warehouse(spark, tmp_path) -> str:
+    """40 timestamped rows and 3 NULL-timestamp rows, the latter in Hive
+    default partition directories."""
+    from pyspark.sql import functions as F
+
+    from demo_otel_parquet_antalya_spark.sources.generator import generate_files
+    from demo_otel_parquet_antalya_spark.sources.otlp import ingest_otlp_json
+    from demo_otel_parquet_antalya_spark.sources.parquet_sink import write_logs
+
+    d = str(tmp_path / "otlp")
+    generate_files(d, n_files=2, records_per_file=20)
+    logs = ingest_otlp_json(spark, d)
+    nulled = logs.limit(3).withColumn("timestamp", F.lit(None).cast("timestamp"))
+    wh = str(tmp_path / "wh")
+    write_logs(logs.unionByName(nulled), wh)
+    return wh
+
+
+def _compacted_warehouse(spark, tmp_path) -> str:
+    """An ingested warehouse, compacted in place."""
+    from demo_otel_parquet_antalya_spark.schema import PARTITION_COLUMNS
+    from demo_otel_parquet_antalya_spark.sources.compaction import compact
+    from demo_otel_parquet_antalya_spark.sources.generator import generate_files
+    from demo_otel_parquet_antalya_spark.streaming.ingest import run_ingest_once
+
+    landing, wh = str(tmp_path / "l"), str(tmp_path / "wh")
+    generate_files(landing, n_files=6, records_per_file=80)
+    run_ingest_once(spark, landing, wh, str(tmp_path / "c"))
+    assert compact(
+        spark, wh, list(PARTITION_COLUMNS), target_rows_per_file=10_000,
+        min_excess_files=1, finalize_streaming=True,
+    ) > 0
+    return wh
+
+
+@pytest.mark.parametrize("layout", ["ingested", "compacted", "null_timestamps"])
+def test_declared_warehouse_schema_matches_inference(spark, tmp_path, layout):
+    """WAREHOUSE_SCHEMA, which the panel reads declare instead of
+    inferring, names the columns inference finds, in its order and with
+    its types, on every layout the package writes."""
+    from demo_otel_parquet_antalya_spark.schema import WAREHOUSE_SCHEMA
+
+    build = {
+        "ingested": _two_hour_warehouse,
+        "compacted": _compacted_warehouse,
+        "null_timestamps": _null_timestamp_warehouse,
+    }[layout]
+    wh = build(spark, tmp_path)
+    inferred = spark.read.parquet(wh).schema
+    assert [(f.name, f.dataType) for f in WAREHOUSE_SCHEMA] == [
+        (f.name, f.dataType) for f in inferred
+    ]
+    assert all(f.nullable for f in WAREHOUSE_SCHEMA)
+    # and a declared read sees the same rows
+    declared = spark.read.schema(WAREHOUSE_SCHEMA).parquet(wh)
+    assert sorted(map(str, declared.collect())) == sorted(
+        map(str, spark.read.parquet(wh).collect())
+    )
+
+
+def test_flat_logs_directory_keeps_inferred_schema(spark, tmp_path):
+    """A logs directory this package did not partition keeps schema
+    inference, so a windowed panel over it answers every row on the raw
+    read and on the pruned route's fallback alike. A declared schema
+    would read its missing year/month/day/hour as NULL, and the window's
+    partition predicates would then drop every row."""
+    from demo_otel_parquet_antalya_spark.plans import facade
+    from demo_otel_parquet_antalya_spark.sources.generator import generate_files
+    from demo_otel_parquet_antalya_spark.sources.otlp import ingest_otlp_json
+    from demo_otel_parquet_antalya_spark.sources.parquet_sink import read_logs
+
+    d, flat = str(tmp_path / "otlp"), str(tmp_path / "flat")
+    generate_files(d, n_files=2, records_per_file=20)
+    ingest_otlp_json(spark, d).write.parquet(flat)
+    logs = read_logs(spark, flat)
+    assert logs.schema == spark.read.parquet(flat).schema
+    lo, hi = logs.selectExpr("min(timestamp)", "max(timestamp)").first()
+    raw = facade.q6_log_panel(logs, lo, hi, limit=1000).collect()
+    pruned = facade.q6_log_panel_pruned(spark, flat, lo, hi, limit=1000).collect()
+    assert len(raw) == 40
+    assert sorted(map(str, raw)) == sorted(map(str, pruned))
+
+
 def test_gate_catalog_lookups_are_bounded(endpoint, spark):
     """The parse gate runs BEFORE the request deadline, so its catalog
     lookups must be bounded: the walk early-exits on the first reason
