@@ -47,6 +47,25 @@ def _default_driver_memory() -> str:
     return f"{max(1, phys // 2**31)}g"
 
 
+def _listing_conf(master: str) -> dict[str, str]:
+    """Keep the file listing of a read on the driver in local mode.
+
+    Spark lists the paths of a read with a Spark job, one task per path,
+    once there are more than ``parallelPartitionDiscovery.threshold`` (32)
+    of them; a registry snapshot passes one path per file. In local mode
+    that job's tasks run inside the driver JVM over the same filesystem,
+    so the job adds only its scheduling round trip, and a local session
+    lists on the driver instead. The trade-off: against an object store
+    (s3a) the driver lists the paths one request after another, where the
+    job's tasks listed them in parallel, one per core; a local session
+    over many object-store paths can set the threshold back through
+    ``extra_conf``. Cluster masters keep Spark's default: there the job
+    spreads the listing over the executors."""
+    if master == "local" or master.startswith("local["):
+        return {"spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1)}
+    return {}
+
+
 def get_spark(
     app_name: str = "demo-otel-parquet-antalya-spark",
     master: str | None = None,
@@ -87,7 +106,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_listing_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

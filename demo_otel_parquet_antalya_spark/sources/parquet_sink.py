@@ -57,12 +57,12 @@ def read_logs(spark: SparkSession, root: str, *paths: str) -> DataFrame:
     them: declaring year/month/day/hour there would read them as NULL, and
     ``time_filter``'s partition predicates would then drop every row."""
     reader = spark.read.option("basePath", root)
-    if paths or _has_layout(spark, root):
+    if paths or has_layout(spark, root):
         reader = reader.schema(WAREHOUSE_SCHEMA)
     return reader.parquet(*(paths or (root,)))
 
 
-def _has_layout(spark: SparkSession, root: str) -> bool:
+def has_layout(spark: SparkSession, root: str) -> bool:
     """Whether ``root``'s top level holds ``service_name=`` partition
     directories: one directory listing, no data read."""
     lead = f"{PARTITION_COLUMNS[0]}="

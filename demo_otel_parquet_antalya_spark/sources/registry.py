@@ -40,6 +40,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from demo_otel_parquet_antalya_spark.schema import WAREHOUSE_SCHEMA
+from demo_otel_parquet_antalya_spark.sources.parquet_sink import has_layout
+
 
 def _list_parquet_files(root: str) -> set[str]:
     found = set()
@@ -240,6 +243,11 @@ class LogTableRegistry:
         column appearing in later files — reads as NULL for older files
         instead of failing or vanishing. Off by default because the footer
         union is a per-file metadata pass; schema-stable readers skip it.
+
+        Without it, a root in this package's ``service_name=`` layout is
+        read under the declared warehouse schema, by the rule of
+        ``parquet_sink.read_logs``, which spares the schema-inference job
+        on every read. Any other layout infers its schema.
         """
         if snapshot_id is not None:
             files = sorted(self._read_snapshot(snapshot_id)["files"])
@@ -247,9 +255,14 @@ class LogTableRegistry:
             files = sorted(self.registered())
         if not files:
             raise ValueError(f"no files registered yet under {self.root}; run sync()")
+        return self._read(files, merge_schema)
+
+    def _read(self, files: list[str], merge_schema: bool = False) -> DataFrame:
         reader = self.spark.read.option("basePath", self.root)
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
+        elif has_layout(self.spark, self.root):
+            reader = reader.schema(WAREHOUSE_SCHEMA)
         return reader.parquet(*files)
 
     def register_view(self, name: str = "otel_logs", merge_schema: bool = False) -> DataFrame:
@@ -298,7 +311,7 @@ class LogTableRegistry:
                 f"no files added since snapshot {since_snapshot_id} "
                 f"(HEAD is {diff['to']})"
             )
-        return self.spark.read.option("basePath", self.root).parquet(*diff["added_files"])
+        return self._read(diff["added_files"])
 
 
     def vacuum_orphans(self, dry_run: bool = True) -> list[str]:

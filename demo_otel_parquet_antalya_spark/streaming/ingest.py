@@ -10,7 +10,8 @@ writer pair (SURVEY.md §2.A2, A6-A7, §3.1):
 
 - Micro-batching IS the collector's batch processor (reference
   docker-compose.yaml:192-195): the trigger interval plays the 5 s flush-age
-  role; ``maxFilesPerTrigger`` bounds batch size like the 10k record cap.
+  role. A batch takes every landing file present at its trigger, where the
+  collector also caps a batch at 10k records.
 - The checkpoint replaces both the writer's buffer state and the sync loop's
   ``/tmp/synced_files.txt`` (reference scripts/sync-logs.sh:44-52): the file
   source tracks processed landing files, the file sink commits output files
@@ -27,21 +28,59 @@ receivers; file listing is the only driver-side cost, bounded via
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from demo_otel_parquet_antalya_spark.schema import OTLP_ENVELOPE_SCHEMA, PARTITION_COLUMNS
 from demo_otel_parquet_antalya_spark.sources.otlp import flatten_otlp
 from demo_otel_parquet_antalya_spark.sources.parquet_sink import with_partition_columns
 
 
-def read_otlp_stream(spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
+def read_otlp_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     """File-source stream over the landing directory (schema enforced, never
     inferred — same contract as batch ``read_otlp_json``)."""
-    reader = spark.readStream.schema(OTLP_ENVELOPE_SCHEMA).option("multiLine", "true")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(landing_dir)
+    return spark.readStream.schema(OTLP_ENVELOPE_SCHEMA).option("multiLine", "true").json(landing_dir)
+
+
+def _read_otlp_protobuf_envelopes(spark: SparkSession, landing_dir: str) -> DataFrame:
+    from demo_otel_parquet_antalya_spark.sources.otlp_proto import (
+        read_otlp_protobuf_stream,
+    )
+
+    return read_otlp_protobuf_stream(spark, landing_dir).select("resourceLogs")
+
+
+# session -> {(reader, landing_dir): the JVM Dataset of the partitioned
+# flat stream}. A new session, also one made after a stop, builds its own;
+# the values hold no Python reference to their session, so a collected
+# session's plans go with it.
+_INGEST_PLANS = weakref.WeakKeyDictionary()
+
+
+def _ingest_sink(
+    spark: SparkSession, read, landing_dir: str, warehouse_root: str, checkpoint_dir: str
+) -> DataStreamWriter:
+    """The partitioned-parquet writer of
+    ``with_partition_columns(flatten_otlp(read(spark, landing_dir)))``,
+    whose plan is built and analyzed once per session and landing dir.
+
+    The plan is the same on every cycle, and rebuilding it in Python cost
+    more than a small cycle's write. Reusing it keeps exactly-once: each
+    ``start()`` resolves the plan's file source anew, against its own
+    query's checkpoint."""
+    plans = _INGEST_PLANS.setdefault(spark, {})
+    key = (read, landing_dir)
+    if key not in plans:
+        plans[key] = with_partition_columns(flatten_otlp(read(spark, landing_dir)))._jdf
+    return (
+        DataFrame(plans[key], spark)
+        .writeStream.format("parquet")
+        .partitionBy(*PARTITION_COLUMNS)
+        .option("path", warehouse_root)
+        .option("checkpointLocation", checkpoint_dir)
+    )
 
 
 def start_ingest_stream(
@@ -50,7 +89,6 @@ def start_ingest_stream(
     warehouse_root: str,
     checkpoint_dir: str,
     trigger_seconds: float = 5.0,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Start the end-to-end ingest query; returns the running StreamingQuery.
 
@@ -58,16 +96,8 @@ def start_ingest_stream(
     (docker-compose.yaml:195); pass ``availableNow``-style one-shot semantics
     by calling ``run_ingest_once`` instead.
     """
-    flat = flatten_otlp(read_otlp_stream(spark, landing_dir, max_files_per_trigger))
-    return (
-        with_partition_columns(flat)
-        .writeStream.format("parquet")
-        .partitionBy(*PARTITION_COLUMNS)
-        .option("path", warehouse_root)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    sink = _ingest_sink(spark, read_otlp_stream, landing_dir, warehouse_root, checkpoint_dir)
+    return sink.trigger(processingTime=f"{trigger_seconds} seconds").start()
 
 
 def run_ingest_once(
@@ -82,17 +112,8 @@ def run_ingest_once(
     checkpoint makes this the incremental-registration loop of the reference
     (scripts/sync-logs.sh:80-86) with exactly-once instead of a state file.
     """
-    flat = flatten_otlp(read_otlp_stream(spark, landing_dir))
-    q = (
-        with_partition_columns(flat)
-        .writeStream.format("parquet")
-        .partitionBy(*PARTITION_COLUMNS)
-        .option("path", warehouse_root)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink = _ingest_sink(spark, read_otlp_stream, landing_dir, warehouse_root, checkpoint_dir)
+    sink.trigger(availableNow=True).start().awaitTermination()
 
 
 def run_ingest_protobuf_once(
@@ -109,21 +130,8 @@ def run_ingest_protobuf_once(
     contract as the JSON path; batch-streaming equivalence is pinned by
     tests/test_otlp_proto.py.
     """
-    from demo_otel_parquet_antalya_spark.sources.otlp_proto import (
-        read_otlp_protobuf_stream,
-    )
-
-    flat = flatten_otlp(read_otlp_protobuf_stream(spark, landing_dir).select("resourceLogs"))
-    q = (
-        with_partition_columns(flat)
-        .writeStream.format("parquet")
-        .partitionBy(*PARTITION_COLUMNS)
-        .option("path", warehouse_root)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink = _ingest_sink(spark, _read_otlp_protobuf_envelopes, landing_dir, warehouse_root, checkpoint_dir)
+    sink.trigger(availableNow=True).start().awaitTermination()
 
 
 def streaming_severity_counts(logs: DataFrame, bucket_seconds: int = 30) -> DataFrame:

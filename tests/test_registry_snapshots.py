@@ -135,6 +135,25 @@ def test_merge_schema_reads_across_attribute_drift(spark, reg):
     assert old.count() == 10
 
 
+def test_registry_outside_the_package_layout_infers_its_schema(spark, reg):
+    """A root without ``service_name=`` directories is not the package's
+    warehouse, so ``table()`` and ``read_increment`` infer the columns
+    (one job each) instead of declaring the warehouse schema."""
+    from tests.test_http_sql import _newest_job_id
+
+    first = reg.current_snapshot_id()
+    _add_batch(spark, reg, 1, 10, 25)
+    reg.sync()
+    before = _newest_job_id(spark)
+    df = reg.table()
+    assert _newest_job_id(spark) > before
+    assert sorted(df.columns) == ["batch", "id"]
+    assert sorted(r.id for r in df.collect()) == list(range(25))
+    added = reg.read_increment(first)
+    assert sorted(added.columns) == ["batch", "id"]
+    assert sorted(r.id for r in added.collect()) == list(range(10, 25))
+
+
 def test_expire_snapshots_keeps_head_and_recent(spark, reg):
     for n, (lo, hi) in enumerate([(10, 25), (25, 30), (30, 40)], start=1):
         _add_batch(spark, reg, n, lo, hi)

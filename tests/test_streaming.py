@@ -10,7 +10,7 @@ import urllib.request
 
 import pytest
 
-from demo_otel_parquet_antalya_spark.sources.otlp import ingest_otlp_json
+from demo_otel_parquet_antalya_spark.sources.otlp import flatten_otlp, ingest_otlp_json
 from demo_otel_parquet_antalya_spark.sources.parquet_sink import read_logs
 from demo_otel_parquet_antalya_spark.streaming.ingest import (
     run_ingest_once,
@@ -171,6 +171,107 @@ def test_stream_batch_equivalence_and_incremental_restart(spark, tmp_path):
     assert read_logs(spark, warehouse).count() == 11
     run_ingest_once(spark, landing, warehouse, ckpt)  # idempotent rerun
     assert read_logs(spark, warehouse).count() == 11
+
+
+_HOUR_NS = 3600 * 10**9
+
+
+def _land_hours(landing: str, tag: str, services, hours, per_hour: int = 2) -> int:
+    """One payload file per service in the landing dir, ``per_hour``
+    records in each of ``hours``; returns the number of records landed.
+    Every record's body is unique."""
+    import os
+
+    os.makedirs(landing, exist_ok=True)
+    for svc in services:
+        p = json.loads(json.dumps(CANONICAL_PAYLOAD))
+        p["resourceLogs"][0]["resource"]["attributes"][0]["value"]["stringValue"] = svc
+        template = p["resourceLogs"][0]["scopeLogs"][0]["logRecords"][0]
+        records = []
+        for h in hours:
+            for i in range(per_hour):
+                rec = json.loads(json.dumps(template))
+                rec["timeUnixNano"] = str(1700000000_000000000 + h * _HOUR_NS + i * 10**9)
+                rec["body"]["stringValue"] = f"{tag} {svc} {h} {i}"
+                records.append(rec)
+        p["resourceLogs"][0]["scopeLogs"][0]["logRecords"] = records
+        tmp = os.path.join(landing, f".{tag}-{svc}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(p, f)
+        os.replace(tmp, os.path.join(landing, f"{tag}-{svc}.json"))
+    return len(services) * len(hours) * per_hour
+
+
+def test_registry_reads_ingest_output_without_listing_or_inference(spark, tmp_path):
+    """Read-back of a registry over the package's own layout: ``table()``
+    declares the warehouse schema and lists its files on the driver, so it
+    submits no Spark job even past Spark's 32-path listing threshold, and
+    the count runs its own two jobs. The declared schema is the one
+    inference finds in those files."""
+    from demo_otel_parquet_antalya_spark.sources.registry import LogTableRegistry
+    from tests.test_http_sql import _newest_job_id
+
+    landing = str(tmp_path / "landing")
+    warehouse = str(tmp_path / "warehouse")
+    services = [f"svc-{k}" for k in range(8)]
+    posted = _land_hours(landing, "a", services, range(5))
+    run_ingest_once(spark, landing, warehouse, str(tmp_path / "ckpt"))
+    reg = LogTableRegistry(spark, warehouse, state_path=str(tmp_path / "state.txt"))
+    reg.sync()
+    files = sorted(reg.registered())
+    assert len(files) >= 40
+
+    before = _newest_job_id(spark)
+    df = reg.table()
+    assert _newest_job_id(spark) == before
+    assert df.count() == posted
+    assert _newest_job_id(spark) - before == 2
+
+    inferred = spark.read.option("basePath", warehouse).parquet(*files).schema
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in inferred
+    ]
+    per_service = dict(df.groupBy("service_name").count().collect())
+    assert per_service == dict.fromkeys(services, posted // len(services))
+
+
+def test_ingest_cycles_reuse_one_plan_and_stay_exactly_once(spark, tmp_path, monkeypatch):
+    """Repeated ``run_ingest_once`` calls on one session build the
+    flattening plan once; each cycle still adds only its own landing
+    files. A restart on another session with the same checkpoint builds
+    its own plan and adds no record twice."""
+    from demo_otel_parquet_antalya_spark.streaming import ingest
+
+    calls = []
+
+    def counting_flatten(df):
+        calls.append(df)
+        return flatten_otlp(df)
+
+    monkeypatch.setattr(ingest, "flatten_otlp", counting_flatten)
+    landing = str(tmp_path / "landing")
+    warehouse = str(tmp_path / "warehouse")
+    ckpt = str(tmp_path / "ckpt")
+
+    def bodies():
+        rows = read_logs(spark, warehouse).select("body").collect()
+        return [r.body for r in rows]
+
+    total = 0
+    for cycle in range(3):
+        total += _land_hours(landing, f"c{cycle}", ["svc-a", "svc-b"], range(2))
+        run_ingest_once(spark, landing, warehouse, ckpt)
+        got = bodies()
+        assert len(got) == len(set(got)) == total
+    assert len(calls) == 1
+
+    other = spark.newSession()
+    total += _land_hours(landing, "restart", ["svc-a"], range(3))
+    run_ingest_once(other, landing, warehouse, ckpt)
+    run_ingest_once(other, landing, warehouse, ckpt)  # no delta: a no-op
+    assert len(calls) == 2
+    got = bodies()
+    assert len(got) == len(set(got)) == total
 
 
 def test_freshness_contract(spark, tmp_path):

@@ -19,8 +19,8 @@ Prints one JSON line per query:
    "shuffle_write_mb": MB, "shuffle_records": R, "input_records": I,
    "wall_best": sec, "wall_all": [...]}
 
-Metrics come from the UI REST API (the tool's session enables the UI on an
-ephemeral port; bench.py's session config is untouched).
+Metrics come from the session's in-process status store, which Spark keeps
+live with the UI disabled: no UI port, no HTTP.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,21 +37,50 @@ from demo_otel_parquet_antalya_spark.plans import QUERIES  # noqa: E402
 from demo_otel_parquet_antalya_spark.session import get_spark  # noqa: E402
 
 
-def _rest(base: str, path: str):
-    with urllib.request.urlopen(base + path) as r:
-        return json.load(r)
+class StatusStore:
+    """JSON reads of the driver's status store. One round trip per list:
+    attribute access through py4j would cost one per field."""
+
+    def __init__(self, spark):
+        jvm = spark._jvm
+        self._sc = spark.sparkContext
+        self._store = self._sc._jsc.sc().statusStore()
+        self._mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+        scala = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+        self._mapper.registerModule(getattr(scala, "MODULE$"))
+        self._no_quantiles = self._sc._gateway.new_array(jvm.double, 0)
+        self._no_statuses = jvm.java.util.ArrayList()
+
+    def _json(self, value):
+        return json.loads(self._mapper.writeValueAsString(value))
+
+    def jobs(self) -> list[dict]:
+        """Every retained job, newest first, once the listener bus has
+        delivered the events of the jobs already run."""
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return self._json(self._store.jobsList(None))
+
+    def stages(self) -> dict[int, dict]:
+        """Stage id -> its last attempt: a retried stage appears once per
+        attempt, and the last one produced the output."""
+        raw = self._json(
+            self._store.stageList(None, False, False, self._no_quantiles, self._no_statuses)
+        )
+        out: dict[int, dict] = {}
+        for s in raw:
+            if s["stageId"] not in out or s["attemptId"] > out[s["stageId"]]["attemptId"]:
+                out[s["stageId"]] = s
+        return out
 
 
 def measure(spark, name: str, sf_dir: str, runs: int) -> dict:
     import gc
 
     sc = spark.sparkContext
-    ui = sc.uiWebUrl
-    app_id = sc.applicationId
-    base = f"{ui}/api/v1/applications/{app_id}"
+    store = StatusStore(spark)
 
     walls = []
-    first_range = None
+    jobs = []
     for i in range(runs):
         spark.catalog.clearCache()
         gc.collect()
@@ -60,44 +88,27 @@ def measure(spark, name: str, sf_dir: str, runs: int) -> dict:
             sc._jvm.System.gc()
         except Exception:
             pass
-        before_jobs = {j["jobId"] for j in _rest(base, "/jobs")}
+        before = max((j["jobId"] for j in store.jobs()), default=-1)
         sc.setJobDescription(f"qm:{name}:{i}")
         t0 = time.perf_counter()
         QUERIES[name].build(spark, sf_dir).count()
         walls.append(round(time.perf_counter() - t0, 3))
         sc.setJobDescription(None)
         if i == 0:
-            jobs = [j for j in _rest(base, "/jobs") if j["jobId"] not in before_jobs]
-            stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-            first_range = (jobs, stage_ids)
+            jobs = [j for j in store.jobs() if j["jobId"] > before]
 
-    jobs, stage_ids = first_range
-    stages = _rest(base, "/stages")
-    by_id = {}
-    for s in stages:
-        # keep the HIGHEST attempt per stage id (ADVICE r14: the REST
-        # /stages ordering is not guaranteed, and setdefault kept whichever
-        # attempt came first — after a stage retry that could be the failed
-        # attempt's metrics)
-        if s["stageId"] in stage_ids and (
-            s["stageId"] not in by_id
-            or s.get("attemptId", 0) > by_id[s["stageId"]].get("attemptId", 0)
-        ):
-            by_id[s["stageId"]] = s
-    swrite = sum(s.get("shuffleWriteBytes", 0) for s in by_id.values())
-    srec = sum(s.get("shuffleWriteRecords", 0) for s in by_id.values())
-    inrec = sum(s.get("inputRecords", 0) for s in by_id.values())
-    tasks = sum(s.get("numCompleteTasks", 0) for s in by_id.values())
-    skipped = sum(1 for s in stage_ids if s not in by_id)  # skipped stages
+    stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
+    by_id = store.stages()
+    ran = [by_id[s] for s in stage_ids if s in by_id and by_id[s]["status"] != "SKIPPED"]
     return {
         "query": name,
         "jobs": len(jobs),
         "stages": len(stage_ids),
-        "stages_skipped": skipped,
-        "tasks": tasks,
-        "shuffle_write_mb": round(swrite / 1e6, 2),
-        "shuffle_records": srec,
-        "input_records": inrec,
+        "stages_skipped": len(stage_ids) - len(ran),
+        "tasks": sum(s["numCompleteTasks"] for s in ran),
+        "shuffle_write_mb": round(sum(s["shuffleWriteBytes"] for s in ran) / 1e6, 2),
+        "shuffle_records": sum(s["shuffleWriteRecords"] for s in ran),
+        "input_records": sum(s["inputRecords"] for s in ran),
         "wall_best": min(walls),
         "wall_all": walls,
     }
@@ -115,10 +126,7 @@ def main() -> None:
     if args.bench:
         names += [n for n in sorted(QUERIES) if QUERIES[n].bench and n not in names]
 
-    spark = get_spark(
-        app_name="query_metrics",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4321"},
-    )
+    spark = get_spark(app_name="query_metrics")
     for name in names:
         print(json.dumps(measure(spark, name, args.sf, args.runs)), flush=True)
 
