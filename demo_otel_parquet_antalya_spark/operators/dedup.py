@@ -14,8 +14,8 @@ Four tiers, increasing scale-friendliness:
 4. ``simhash64`` — 64-bit SimHash fingerprints + hamming-distance candidate
    pairing via rotated prefix blocks.
 
-All shingling/hashing is JVM-side (higher-order functions + xxhash64) — no
-Python in any hot path.
+Shingling/hashing is JVM-side (higher-order functions + xxhash64), except
+the MinHash signatures: one numpy kernel over Arrow batches.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from demo_otel_parquet_antalya_spark.functions.text import fingerprint, word_shi
 from demo_otel_parquet_antalya_spark.util import ensure_parallelism
 
 # Mersenne prime modulus for the MinHash universal-hash family. 2^31-1 keeps
-# a*x + b inside a signed 64-bit long (a, x < 2^31), avoiding ANSI overflow.
+# a*h + b inside 64 bits (a < 2^31, crc32 h < 2^32).
 _MERSENNE = (1 << 31) - 1
 
 
@@ -121,57 +121,21 @@ def minhash_signatures(
     num_hashes: int = 64,
     seed: int = 7,
 ) -> DataFrame:
-    """(id, sig: array<bigint>) MinHash signatures.
+    """(id, sig: array<bigint>) MinHash signatures via a numpy Arrow-batch
+    kernel.
 
-    Shingles hash to 64-bit via xxhash64 ONCE per (doc, shingle); each
-    permutation is an affine map mod a Mersenne prime evaluated as one of
-    num_hashes ``min`` aggregate columns over the exploded shingles. This
-    keeps every expression inside whole-stage codegen — higher-order-function
-    lambdas are interpreted per element and Catalyst does not CSE across
-    them, so the "compute the signature as an array fold per row" forms
-    measured 25-50x slower at sf0.1. Cost: one map-side-combined shuffle of
-    (id, 64 longs) partials — negligible next to the hash arithmetic it
-    parallelizes, and MinHash output feeds a banding shuffle anyway.
+    Each document's word n-gram shingles hash once to crc32 into a SET
+    (duplicate shingles cannot change a min), and all ``num_hashes``
+    permutations — affine maps mod a Mersenne prime — evaluate as one
+    uint64 outer-product + mod + row-min per document. Computing the
+    signature as a per-row array fold of higher-order functions loses
+    badly: the lambdas are interpreted per element and Catalyst does not
+    CSE across them (measured 25-50x slower at sf0.1); the batch kernel
+    also halves the cost of 64 codegen'd ``min`` aggregate columns over
+    exploded shingles, with no shuffle before banding.
 
     Docs with fewer than ``n`` words produce no shingles and drop out (they
     can near-dup-match nothing; exact_dedup handles empty/degenerate docs).
-    """
-    params = _minhash_params(num_hashes, seed)
-    sh = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("s"),
-    )
-    # duplicate shingles can't change a min — no distinct needed
-    hashed = sh.select("id", F.pmod(F.xxhash64("s"), F.lit(_MERSENNE)).alias("h"))
-    # h, a < 2^31 so h*a + b stays inside a signed 64-bit long (no overflow)
-    mins = hashed.groupBy("id").agg(
-        *[
-            F.min(F.pmod(F.col("h") * F.lit(a) + F.lit(b), F.lit(_MERSENNE))).alias(f"m{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
-    return mins.select("id", F.array(*[f"m{i}" for i in range(num_hashes)]).alias("sig"))
-
-
-def minhash_signatures_pandas(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    seed: int = 7,
-) -> DataFrame:
-    """(id, sig) MinHash signatures via a numpy Arrow-batch kernel.
-
-    Same affine hash family as ``minhash_signatures`` but the base shingle
-    hash is crc32 (C-speed per call) instead of xxhash64, and all
-    ``num_hashes`` permutations evaluate as one uint64 outer-product + mod
-    + row-min per document instead of 64 codegen'd aggregate columns. The
-    two kernels produce different (equally uniform) hash families, so
-    banding buckets differ — recall, and the exact-verified output pair
-    set, do not (pytest-checked). Wins by ~2x at sf0.1 because the per-
-    shingle work drops from 64 interpreted-plan pmods to a BLAS-shaped
-    numpy loop; the (id, sig) output and downstream banding are identical.
     """
     import numpy as np
 
@@ -274,14 +238,9 @@ def minhash_dedup_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     seed: int = 7,
-    sig_impl: str = "pandas",
 ) -> DataFrame:
     """The scale path: LSH candidates, then EXACT Jaccard verification only
     on candidate pairs. Returns (id_a, id_b, jaccard >= threshold).
-
-    ``sig_impl`` picks the signature kernel ("pandas" = numpy batch kernel,
-    "jvm" = codegen aggregate columns); the verified output pair set is the
-    same either way.
 
     Verification re-shingles ONLY docs that appear in some candidate pair
     (semi-join prune — at 100 TB that's the near-dup sliver of the corpus,
@@ -291,8 +250,7 @@ def minhash_dedup_pairs(
     measured >2x the whole pipeline's cost at sf0.1.
     """
     rows_per_band = num_hashes // bands
-    sig_fn = minhash_signatures_pandas if sig_impl == "pandas" else minhash_signatures
-    sigs = sig_fn(df, id_col, text_col, n, num_hashes, seed)
+    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, seed)
     # candidate pairs are the near-dup sliver (tiny); materialize ONCE so
     # the three consumers below (cand_ids prune, sizes, final semi-join)
     # don't each re-run the signature+banding pipeline — measured 2x on
@@ -397,9 +355,9 @@ def embedding_cosine_pairs(
 def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """64-bit SimHash fingerprints: per-token xxhash64 (computed once), each
     bit votes ±1 via 64 codegen'd sum aggregates over the exploded tokens,
-    fingerprint bit = sign of the vote sum. Same explode+groupBy shape as
-    ``minhash_signatures`` and for the same reason: per-row array folds with
-    higher-order functions re-hash per bit and run interpreted.
+    fingerprint bit = sign of the vote sum. Explode+groupBy rather than
+    per-row array folds: higher-order functions would re-hash per bit and
+    run interpreted.
 
     Token-less docs drop out (cannot near-dup-match anything).
 
@@ -961,7 +919,6 @@ def minhash_index_write(
     num_hashes: int = 64,
     bands: int = 16,
     seed: int = 7,
-    sig_impl: str = "pandas",
 ) -> None:
     """Persist the corpus's banded LSH index as parquet partitioned by band:
     (bucket, id) under band=N directories.
@@ -973,8 +930,7 @@ def minhash_index_write(
     with, and index maintenance (append a new batch's own bands after it is
     admitted) is a partition-local append."""
     rows_per_band = num_hashes // bands
-    sig_fn = minhash_signatures_pandas if sig_impl == "pandas" else minhash_signatures
-    sigs = sig_fn(docs, id_col, text_col, n, num_hashes, seed)
+    sigs = minhash_signatures(docs, id_col, text_col, n, num_hashes, seed)
     (
         banded_buckets(sigs, bands, rows_per_band)
         .write.mode("overwrite")
@@ -994,7 +950,6 @@ def minhash_dedup_incremental(
     num_hashes: int = 64,
     bands: int = 16,
     seed: int = 7,
-    sig_impl: str = "pandas",
 ) -> DataFrame:
     """Dedup a NEW batch against an already-indexed corpus: returns
     (id_new, id_old, jaccard >= threshold) without recomputing anything
@@ -1014,9 +969,8 @@ def minhash_dedup_incremental(
     """
     spark = new_docs.sparkSession
     rows_per_band = num_hashes // bands
-    sig_fn = minhash_signatures_pandas if sig_impl == "pandas" else minhash_signatures
     new_banded = banded_buckets(
-        sig_fn(new_docs, id_col, text_col, n, num_hashes, seed), bands, rows_per_band
+        minhash_signatures(new_docs, id_col, text_col, n, num_hashes, seed), bands, rows_per_band
     ).select(F.col("id").alias("id_new"), "band", "bucket")
     idx = spark.read.parquet(index_path).select(
         F.col("id").alias("id_old"), "band", "bucket"

@@ -346,57 +346,6 @@ def documents_as_media(documents: DataFrame) -> DataFrame:
     )
 
 
-def extract_features_arrow(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """``extract_features`` on the mapInArrow surface: the worker receives
-    raw ``pyarrow.RecordBatch``es — no pandas conversion on either side of
-    the pipe, so binary payload buffers pass zero-copy into the kernel.
-    The pandas variant is friendlier for featurization code that wants
-    Series ops; this one is the lower-overhead path when the kernel reads
-    raw bytes anyway (identical output, pytest-checked).
-    """
-    if not decode_stub:
-        raise NotImplementedError(
-            "real decode requires image/audio libs not present in this container; "
-            "plug the codec into the decode slot below"
-        )
-
-    def run(batches):
-        import pyarrow as _pa
-
-        for rb in batches:
-            ids = rb.column(rb.schema.get_field_index("media_id"))
-            payloads = rb.column(rb.schema.get_field_index("payload"))
-            n_bytes, checksums, feats = [], [], []
-            for payload in payloads:
-                if not payload.is_valid:
-                    n_bytes.append(None)
-                    checksums.append(None)
-                    feats.append(None)
-                    continue
-                b = payload.as_py()
-                checksum = 0
-                for byte in b:
-                    checksum = (checksum * 31 + byte) % (1 << 62)
-                n_bytes.append(len(b))
-                checksums.append(checksum)
-                hist = [0.0] * 8
-                for byte in b:
-                    hist[byte % 8] += 1.0
-                total = max(len(b), 1)
-                feats.append([h / total for h in hist])
-            yield _pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    _pa.array(n_bytes, type=_pa.int64()),
-                    _pa.array(checksums, type=_pa.int64()),
-                    _pa.array(feats, type=_pa.list_(_pa.float32())),
-                ],
-                names=["media_id", "n_bytes", "checksum", "feature"],
-            )
-
-    return media.select("media_id", "payload").mapInArrow(run, FEATURE_SCHEMA)
-
-
 IMAGE_HEADER_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

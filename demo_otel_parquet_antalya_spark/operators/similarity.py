@@ -94,80 +94,6 @@ def cosine_topk(
     )
 
 
-def cosine_topk_pandas(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Brute-force cosine top-k via a vectorized pandas/numpy kernel.
-
-    The Arrow-batched alternative to ``cosine_topk``: the query matrix is
-    collected once (it is small by contract — the probe batch), broadcast
-    into a mapInPandas closure, and every Arrow batch of vectors scores
-    against ALL queries with one numpy matmul. Per-element work is a fused
-    BLAS multiply instead of an interpreted JVM fold, so this wins when
-    dim × |Q| is large; the JVM variant wins when Python worker startup
-    dominates. Same per-query window top-k on the JVM side afterwards.
-
-    Self-contained closure (numpy imported in the worker): executors need
-    no package install.
-    """
-    import numpy as np
-
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.asarray([list(map(float, r[1])) for r in q_rows])  # |Q| x dim
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    import pandas as pd  # noqa: F401  (type reference below)
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = _np.asarray([list(map(float, x)) for x in pdf[vec_col]])  # B x dim
-            nv = _np.linalg.norm(v, axis=1)
-            sims = (v @ q_mat.T) / _np.outer(nv, q_norm)  # B x |Q|
-            n_ids = pdf[id_col].to_numpy()
-            yield _pd.DataFrame(
-                {
-                    "query_id": _np.repeat(q_ids, len(n_ids)),
-                    "neighbor_id": _np.tile(n_ids, len(q_ids)),
-                    "sim": _np.round(sims.T.reshape(-1), round_digits),
-                }
-            )
-
-    scored = (
-        ensure_parallelism(vectors)
-        .select(id_col, vec_col)
-        .mapInPandas(score, out_schema)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
-
-
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     """Deterministic random hyperplanes (driver-side constants, broadcast as
     literals — tiny: n_planes x dim doubles)."""
@@ -177,34 +103,10 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Bit-signature: sign of <v, plane_i> per plane, packed to a long."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(w) for w in plane]),
-                    lambda x, wcol: x.cast("double") * wcol,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            F.shiftleft(F.lit(1).cast("long"), i),
-        ).otherwise(F.lit(0).cast("long"))
-        for i, plane in enumerate(planes)
-    ]
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig.bitwiseOR(b)
-    return sig
-
-
 def _signatures_batch(tables: list[list[list[float]]]):
     """All tables' bit-signatures in ONE numpy matmul per Arrow batch.
 
-    The JVM expression form evaluates n_tables x n_planes independent
+    A pure-expression form would evaluate n_tables x n_planes independent
     zip_with/aggregate folds per row (HOF lambdas are interpreted and share
     no work); here the whole plane bank is a single (tables*planes) x dim
     matrix and every batch scores with one BLAS gemm, then sign bits pack
@@ -245,19 +147,15 @@ def lsh_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    sig_impl: str = "pandas",
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
 
     Each of ``n_tables`` tables buckets by an independent n_planes-bit
     signature; a query probes its bucket in every table, candidates are
     unioned and exactly re-ranked. Index pass is one projection over the
-    vectors; the probe join shuffles only on (table, signature).
-
-    ``sig_impl`` picks the signature kernel: ``"pandas"`` (default) computes
-    every table's signature with one numpy matmul per Arrow batch;
-    ``"jvm"`` keeps the pure-expression zip_with/aggregate form (no Python
-    workers, but n_tables x n_planes interpreted folds per row).
+    vectors; the probe join shuffles only on (table, signature). Every
+    table's signature comes from one numpy matmul per Arrow batch
+    (``_signatures_batch``).
     """
     tables = [
         _hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)
@@ -267,28 +165,15 @@ def lsh_topk(
     # probes every table — a union of n_tables separate joins re-evaluates
     # the full signature projection per branch (n_tables^2 signature work;
     # measured slower than brute force at 16 tables)
-    sig_udf = _signatures_batch(tables) if sig_impl == "pandas" else None
+    sig_udf = _signatures_batch(tables)
 
     def bucketed(df, idc, vecc, out_id, out_vec, out_norm):
-        if sig_udf is not None:
-            return df.select(
-                F.col(idc).alias(out_id),
-                F.col(vecc).alias(out_vec),
-                _norm(F.col(vecc)).alias(out_norm),
-                F.posexplode(sig_udf(F.col(vecc))).alias("tbl", "sig"),
-            )
-        sigs = F.array(
-            *[
-                F.struct(F.lit(t).alias("tbl"), _signature(F.col(vecc), tables[t]).alias("sig"))
-                for t in range(n_tables)
-            ]
-        )
         return df.select(
             F.col(idc).alias(out_id),
             F.col(vecc).alias(out_vec),
             _norm(F.col(vecc)).alias(out_norm),
-            F.explode(sigs).alias("b"),
-        ).select(out_id, out_vec, out_norm, "b.tbl", "b.sig")
+            F.posexplode(sig_udf(F.col(vecc))).alias("tbl", "sig"),
+        )
 
     vec_b = bucketed(ensure_parallelism(vectors), id_col, vec_col, "neighbor_id", "v", "nv")
     q_b = bucketed(queries, query_id_col, query_vec_col, "query_id", "qv", "nq").withColumnsRenamed(
@@ -369,8 +254,7 @@ def ivf_topk(
     """IVF-style approximate top-k.
 
     Vectors get assigned to their nearest centroid once; queries probe the
-    ``nprobe`` nearest centroid cells and re-rank exactly. See
-    ``write_ivf_index`` for the materialized, partition-pruned form.
+    ``nprobe`` nearest centroid cells and re-rank exactly.
     Pass ``centroids`` (cid, cv, ncv — e.g. from
     ``kmeans_refine_centroids``) to override the default hash-sampled set.
     """
@@ -396,78 +280,6 @@ def ivf_topk(
     )
     scored = (
         probes.join(assigned, "cid")
-        .filter(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("nid").alias("neighbor_id"),
-            F.round(_dot(F.col("v"), F.col("qv")) / (F.col("nv") * F.col("nq")), 6).alias("sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
-
-
-def write_ivf_index(
-    vectors: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index: assignments land as parquet PARTITIONED BY
-    the centroid cell, centroids beside them.
-
-    This is the 100 TB deployment shape the in-memory ``ivf_topk`` plan
-    stands for: because cid is a partition column, a probe of ``nprobe``
-    cells is a partition-PRUNED scan — the query touches nprobe/n_centroids
-    of the index bytes and never shuffles the index (asserted in
-    tests/test_northstar_ops.py). Rebuild is one linear pass; cells append
-    independently, so incremental adds write only their own partitions.
-    """
-    centroids = _ivf_centroids(vectors, n_centroids, id_col, vec_col)
-    assigned = _ivf_assign(vectors, centroids, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/cells")
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Query a materialized IVF index: probe cells resolve DRIVER-side from
-    the (tiny, broadcastable) centroid table, so the cell scan carries an
-    ``isin`` filter on the partition column — partition pruning does the
-    index lookup."""
-    centroids = spark.read.parquet(f"{path}/centroids")
-    probe_w = W.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cid"))
-    probes = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("qv"),
-            _norm(F.col(query_vec_col)).alias("nq"),
-        )
-        .join(F.broadcast(centroids))
-        .select(
-            "query_id", "qv", "nq", "cid",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("ncv")), 9).alias("csim"),
-        )
-        .withColumn("r", F.row_number().over(probe_w))
-        .filter(F.col("r") <= nprobe)
-        .select("query_id", "qv", "nq", "cid")
-    )
-    cells = sorted({r.cid for r in probes.select("cid").distinct().collect()})
-    index = spark.read.parquet(f"{path}/cells").filter(F.col("cid").isin(cells))
-    scored = (
-        F.broadcast(probes).join(index, "cid")
         .filter(F.col("nid") != F.col("query_id"))
         .select(
             "query_id",
@@ -585,8 +397,9 @@ def kmeans_refine_centroids(
 
     Clusters that lose all members drop out (k may shrink); ties break on
     centroid id via the rounded similarity, keeping runs deterministic.
+    An empty corpus gives an empty centroid frame and an empty history.
     """
-    dim = len(vectors.select(vec_col).first()[0])
+    first = vectors.select(vec_col).first()
     unit = vectors.select(
         F.col(id_col).alias("nid"),
         F.transform(F.col(vec_col), lambda x: x / _norm(F.col(vec_col))).alias("v"),
@@ -598,6 +411,9 @@ def kmeans_refine_centroids(
         .limit(n_centroids)
         .select("cid", "cv", _norm(F.col("cv")).alias("ncv"))
     )
+    if first is None:  # empty corpus: no centroid to refine
+        return cents, []
+    dim = len(first[0])
 
     history: list[float] = []
     for _ in range(n_iters):

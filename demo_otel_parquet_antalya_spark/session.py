@@ -66,6 +66,9 @@ def _listing_conf(master: str) -> dict[str, str]:
     return {}
 
 
+_STREAMING_AQE_LOGGER = "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream"
+
+
 def get_spark(
     app_name: str = "demo-otel-parquet-antalya-spark",
     master: str | None = None,
@@ -110,6 +113,10 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # the streaming planner turns AQE off per query by design; its WARN on
+    # every streaming start (each ingest cycle) carries no signal
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(_STREAMING_AQE_LOGGER, log4j.Level.ERROR)
     return spark
 
 

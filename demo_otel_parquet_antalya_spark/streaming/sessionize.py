@@ -22,13 +22,8 @@ package needed on executors), like every Python-side stage in this engine.
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
-
-if TYPE_CHECKING:  # pragma: no cover
-    pass
 
 OUTPUT_SCHEMA = (
     "user_id bigint, session_start timestamp, session_end timestamp, n_events bigint"
@@ -47,8 +42,6 @@ def sessionize_stream(
 
     ``events`` must be a streaming DataFrame with an event-time column.
     """
-    import pandas as pd  # driver-side; re-imported in the worker closure
-
     gap_us = gap_seconds * 1_000_000
 
     def close_sessions(key, pdf_iter, state):
@@ -109,106 +102,3 @@ def sessionize_stream(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
-
-def sessionize_stream_tws(
-    events: DataFrame,
-    gap_seconds: int = 21600,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """The same sessionizer on Spark 4's ``transformWithStateInPandas`` —
-    the successor stateful API (SPARK-49564 "state v2"): typed state handles
-    (value/list/map) instead of one struct, explicit per-key timers instead
-    of a single timeout slot, and state-store-backed TTL. Output is
-    pytest-proven identical to ``sessionize_stream``; this twin exists so
-    pipelines adopting the new API have a reference implementation with the
-    engine's session semantics.
-
-    Scale shape is unchanged: three scalars of state per live key, one
-    event-time timer per key reaping idle sessions at the watermark.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_seconds * 1_000_000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("session", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as _pd
-
-            (uid,) = key
-            ts_us = []
-            for pdf in rows:
-                ts_us.extend(int(t.value // 1000) for t in _pd.to_datetime(pdf["ts"]))
-            if not ts_us:
-                return iter([])
-            ts_us.sort()
-
-            if self._state.exists():
-                start_us, last_us, n = self._state.get()
-            else:
-                start_us, last_us, n = ts_us[0], ts_us[0], 0
-
-            closed = {"user_id": [], "session_start": [], "session_end": [], "n_events": []}
-            for t in ts_us:
-                if n > 0 and t - last_us > gap_us:
-                    closed["user_id"].append(uid)
-                    closed["session_start"].append(_pd.Timestamp(start_us, unit="us"))
-                    closed["session_end"].append(_pd.Timestamp(last_us, unit="us"))
-                    closed["n_events"].append(n)
-                    start_us, n = t, 0
-                last_us = t
-                n += 1
-
-            self._state.update((start_us, last_us, n))
-            # one live timer per key: re-arm at (last + gap), clamped past the
-            # current watermark so the reap always fires
-            for expiry in list(self._handle.listTimers()):
-                self._handle.deleteTimer(expiry)
-            self._handle.registerTimer(
-                max((last_us + gap_us) // 1000, timerValues.getCurrentWatermarkInMs() + 1)
-            )
-            if closed["user_id"]:
-                return iter([_pd.DataFrame(closed)])
-            return iter([])
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            import pandas as _pd
-
-            (uid,) = key
-            if not self._state.exists():
-                return iter([])
-            start_us, last_us, n = self._state.get()
-            self._state.clear()
-            return iter(
-                [
-                    _pd.DataFrame(
-                        {
-                            "user_id": [uid],
-                            "session_start": [_pd.Timestamp(start_us, unit="us")],
-                            "session_end": [_pd.Timestamp(last_us, unit="us")],
-                            "n_events": [n],
-                        }
-                    )
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    keyed = events.select(
-        events[key_col].alias("user_id"), events[ts_col].alias("ts")
-    ).withWatermark("ts", watermark_delay)
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )

@@ -11,7 +11,7 @@ on the synthetic documents/embeddings tables, stage by stage.
 5. flag cross-document repeated n-gram spans (substring-dedup tier)
 6. semantic dedup over the embeddings (SemDeDup shape)
 7. draw a deterministic per-language sample (md5 order, no RNG state)
-8. build + query a partition-pruned IVF ANN index over the embeddings
+8. IVF approximate nearest-neighbour search over the embeddings
 9. incremental dedup: probe a NEW batch against the persisted LSH index
 10. train a BPE tokenizer on the corpus and encode it
 11. line-level dedup (RefinedWeb tier): flag + scrub cross-doc boilerplate
@@ -88,13 +88,11 @@ def main() -> None:
     )
     sample.orderBy("lang", "doc_id").show(12)
 
-    print("== 8. IVF ANN index: build partitioned by cell, probe with pruning ==")
-    with tempfile.TemporaryDirectory() as tmp:
-        similarity.write_ivf_index(emb, f"{tmp}/ivf", n_centroids=16)
-        queries = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        )
-        similarity.ivf_topk_indexed(spark, f"{tmp}/ivf", queries, k=3, nprobe=4).show()
+    print("== 8. IVF ANN: assign vectors to centroid cells, probe nprobe cells ==")
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    similarity.ivf_topk(emb, queries, k=3, n_centroids=16, nprobe=4).show()
 
     print("== 9. incremental dedup against the persisted LSH band index ==")
     with tempfile.TemporaryDirectory() as tmp:

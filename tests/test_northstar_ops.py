@@ -58,16 +58,6 @@ def test_ivf_recall_vs_bruteforce(spark, emb):
     assert recall >= 0.5, f"IVF recall {recall:.2f} below floor"
 
 
-def test_pandas_cosine_matches_jvm(spark, emb):
-    """The numpy mapInPandas cosine kernel returns the same neighbor sets as
-    the JVM fold implementation (float sum order may differ at the last ulp,
-    so compare rank sets, not raw sims)."""
-    q = _queries(emb)
-    jvm = _topk_sets(similarity.cosine_topk(emb, q, k=5))
-    pdk = _topk_sets(similarity.cosine_topk_pandas(emb, q, k=5))
-    assert jvm == pdk
-
-
 def test_simhash_flags_true_near_dups(spark, docs):
     """Construct guaranteed near-identical docs: copies with one token changed.
     SimHash must put them within small hamming distance; unrelated docs far."""
@@ -233,28 +223,6 @@ def test_connected_components_observed_convergence(spark):
     assert dedup.connected_components(empty).collect() == []
 
 
-def test_ivf_index_prunes_partitions_and_matches_inmemory(spark, emb, tmp_path):
-    """The materialized IVF index must (a) return the same results as the
-    in-memory ivf_topk at the same parameters, and (b) plan the cell scan
-    with partition filters on cid — the pruned-index read."""
-    import contextlib
-    import io
-
-    path = str(tmp_path / "ivf")
-    similarity.write_ivf_index(emb, path, n_centroids=16)
-    q = _queries(emb)
-    indexed = similarity.ivf_topk_indexed(spark, path, q, k=5, nprobe=4)
-    inmem = similarity.ivf_topk(emb, q, k=5, n_centroids=16, nprobe=4)
-    assert _topk_sets(indexed) == _topk_sets(inmem)
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        indexed.explain("formatted")
-    plan = buf.getvalue()
-    pf_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert any("cid" in l for l in pf_lines), plan
-
-
 def test_connected_components_random_graphs_match_union_find(spark):
     """Randomized cross-check: distributed label propagation must agree with
     a pure-python union-find on arbitrary edge sets (bounded size — each
@@ -298,17 +266,6 @@ def test_connected_components_random_graphs_match_union_find(spark):
     check()
 
 
-def test_multimodal_arrow_kernel_matches_pandas(spark, docs):
-    """mapInArrow and mapInPandas feature kernels must produce identical
-    rows (same checksums, byte counts, histograms)."""
-    media = multimodal.documents_as_media(docs)
-    pd_rows = {r.media_id: (r.n_bytes, r.checksum, tuple(r.feature))
-               for r in multimodal.extract_features(media).collect()}
-    ar_rows = {r.media_id: (r.n_bytes, r.checksum, tuple(r.feature))
-               for r in multimodal.extract_features_arrow(media).collect()}
-    assert pd_rows == ar_rows
-
-
 def test_operators_handle_empty_inputs(spark):
     """Degenerate inputs must yield empty results, not errors — a 100 TB
     job's per-partition slices routinely include empty key groups."""
@@ -324,7 +281,10 @@ def test_operators_handle_empty_inputs(spark):
     assert dedup.exact_dedup(empty_docs).count() == 0
     assert dedup.connected_components(empty_pairs).count() == 0
     assert similarity.cosine_topk(empty_vecs, q).count() == 0
-    assert similarity.cosine_topk_pandas(empty_vecs, q).count() == 0
+    cents, hist = similarity.kmeans_refine_centroids(empty_vecs)
+    assert cents.columns == ["cid", "cv", "ncv"] and cents.count() == 0 and hist == []
+    assert similarity.ivf_topk(empty_vecs, q).count() == 0
+    assert similarity.cosine_topk_int8(empty_vecs, q).count() == 0
     assert similarity.lsh_topk(empty_vecs, q).count() == 0
 
 

@@ -37,3 +37,11 @@ def test_local_session_lists_explicit_paths_on_the_driver(spark, tmp_path):
     assert df.count() == 400
     assert session._listing_conf("spark://head:7077") == {}
     assert session._listing_conf("local-cluster[2,1,1024]") == {}
+
+
+def test_streaming_aqe_warning_is_silenced(spark):
+    """Every streaming start logs that AQE is off for the stream; the engine
+    session sets that logger to ERROR so ingest cycles stay quiet."""
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    level = log4j.LogManager.getLogger(session._STREAMING_AQE_LOGGER).getLevel()
+    assert level.toString() == "ERROR"
