@@ -281,8 +281,11 @@ def pagerank(
     canonical edge frame each round; above it the edge list is
     persist()ed hash-partitioned on ``src`` and each round
     shuffle-hash-joins the contrib table into that layout — both paths
-    compute the identical result (see _iterate).
+    compute the identical result (see _iterate). ``k=0`` returns rank_0,
+    1/N for every node.
     """
+    if k < 0:
+        raise ValueError(f"pagerank needs k >= 0 rounds, got {k}")
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
@@ -343,6 +346,8 @@ def pagerank(
     contrib, loop = _iterate(
         nodes, "node", None, k, step, every=3, edges=e, by=("src",)
     )
+    if contrib is None:  # k == 0: no round ran
+        return nodes.select("node", F.lit(1.0 / loop.n_nodes).alias("rank"))
     return nodes.join(contrib, nodes.node == contrib.node_c, "left").select(
         "node", rank_of(F.col("c"), loop.n_nodes).alias("rank")
     )
@@ -369,7 +374,8 @@ def hits(
     DBL_MAX). This removes every per-round normalizer aggregate, which
     would otherwise add a materialized frame per half-step.
 
-    Fixed iteration count, hub_0 = 1.0 — deterministic, so a relational
+    Fixed iteration count ``k >= 1`` (one round makes both scores),
+    hub_0 = 1.0 — deterministic, so a relational
     oracle replays it as k unrolled raw join+aggregate rounds plus one
     final normalization. Nodes with no out-edges have hub 0, no in-edges
     authority 0 (coalesced at the end).
@@ -382,6 +388,8 @@ def hits(
     shuffle-hash-joins only the score table into the matching layout.
     Lineage is cut after each round's hub half-step.
     """
+    if k < 1:
+        raise ValueError(f"hits needs k >= 1 rounds, got {k}")
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()

@@ -14,6 +14,18 @@ Scale notes (100 TB / 1000-executor design intent):
   in this engine is written so filters/projections reach the scan node.
 - ``maxRecordsPerFile`` mirrors the reference writer's 200k-row flush cap
   (docker-compose.yaml:87-89) so files stay row-group friendly.
+- The generated-class cache is sized to the working set. Spark keeps 100
+  compiled classes by default (``spark.sql.codegen.cache.maxEntries``),
+  an LRU, but one pass over the 23 bench queries generates ~513 distinct
+  classes and perfbench's six ``suite`` queries ~106. A cache smaller
+  than the set a pass cycles through evicts each class before its reuse,
+  so every warm pass re-runs Janino on all of them (about 10 ms a
+  class). The price is metaspace: a cached class stays loaded, ~8 KB
+  each, so the bench working set holds ~3.4 MiB more than the default
+  cache and a full cache at most ~16 MiB. It is a static conf:
+  ``CodeGenerator`` reads it once per JVM, at its first compile, so it
+  takes effect only through the builder, before the first session;
+  ``spark.conf.set`` afterwards cannot change it.
 """
 
 from __future__ import annotations
@@ -24,6 +36,9 @@ from pyspark.sql import SparkSession
 
 # Reference flush cap: OTLP2PARQUET_BATCH_MAX_ROWS=200000 (docker-compose.yaml:88)
 MAX_RECORDS_PER_FILE = 200_000
+# Generated-class cache entries: ~4x the ~513 classes one pass over the 23
+# bench queries generates, so a warm pass compiles nothing (Scale notes)
+CODEGEN_CACHE_MAX_ENTRIES = 2048
 
 
 def default_parallelism() -> int:
@@ -99,6 +114,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxRecordsPerFile", str(MAX_RECORDS_PER_FILE))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         # read parquet TIMESTAMP(NANOS) columns (e.g. events.ts) as long nanos;
         # the table loader converts to µs TimestampType (lossless for this data)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

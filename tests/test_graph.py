@@ -585,3 +585,30 @@ def test_derived_limit_floors_executor_count_under_dynamic_allocation(
     # dynamicAllocation off: ceilings are ignored entirely
     overrides["spark.dynamicAllocation.enabled"] = "false"
     assert derived_broadcast_state_max(spark, 8.0) == base
+
+
+def test_zero_rounds_return_the_initial_answer(spark):
+    """k=0 / rounds=0 is the loop's starting point: pagerank's rank_0 is
+    1/N everywhere, k_core is the unpeeled degree filter, label
+    propagation keeps label_0(v) = v."""
+    rows = [("A", "B", 1.0), ("B", "C", 2.0), ("C", "A", 1.0), ("C", "D", 1.0)]
+    assert _ranks(spark, rows, k=0) == pytest.approx({n: 0.25 for n in "ABCD"})
+    path = [("a", "b"), ("b", "c"), ("c", "d")]
+    assert _kcore(spark, path, k=2, rounds=0) == {"b": 2, "c": 2}
+    assert _lpa(spark, path, rounds=0) == {n: n for n in "abcd"}
+
+
+def test_round_counts_below_the_loop_floor_raise_before_any_job(spark):
+    """pagerank needs k >= 0 and hits k >= 1 (one round makes both scores);
+    an invalid count fails at the call, before its pre-loop jobs run."""
+    from tests.test_http_sql import _newest_job_id
+
+    edges = spark.createDataFrame([("A", "B")], "src string, dst string")
+    spark.range(1).count()  # a job to bracket from
+    before = _newest_job_id(spark)
+    with pytest.raises(ValueError):
+        pagerank(edges, k=-1)
+    for k in (0, -1):
+        with pytest.raises(ValueError):
+            hits(edges, k=k)
+    assert _newest_job_id(spark) == before

@@ -1,5 +1,6 @@
-"""session.get_spark's driver heap default: derived from physical memory, so
-a heap never outgrows the machine it runs on."""
+"""session.get_spark's settings: the driver heap derived from physical
+memory, driver-side listing, the streaming AQE logger and the generated-class
+cache each hold in the session the engine builds."""
 
 from __future__ import annotations
 
@@ -45,3 +46,26 @@ def test_streaming_aqe_warning_is_silenced(spark):
     log4j = spark.sparkContext._jvm.org.apache.logging.log4j
     level = log4j.LogManager.getLogger(session._STREAMING_AQE_LOGGER).getLevel()
     assert level.toString() == "ERROR"
+
+
+def test_warm_working_set_compiles_no_class(spark):
+    """A warm pass over more generated classes than Spark's default cache
+    holds (100) compiles none of them. Each query inlines its own literal,
+    so each generates its own classes; with a cache smaller than the set,
+    the LRU evicts every class before its reuse and the second pass
+    recompiles them all."""
+    from pyspark.sql import functions as F
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = compiles.getCount()
+        for i in range(64):
+            spark.range(2).select((F.col("id") * 7 + (7919 + i)).alias("x")).collect()
+        return compiles.getCount() - before
+
+    assert one_pass() > 100
+    assert one_pass() == 0
+    want = str(session.CODEGEN_CACHE_MAX_ENTRIES)
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == want
